@@ -4,7 +4,7 @@ object Bench {
 
   /** The measurement action for a query: count() for plans count()
     * cannot prune, a full-row checksum otherwise — shared by Bench and
-    * ShuffleAudit so both tools measure the ADVERTISED plan (a
+    * Profile so both tools measure the ADVERTISED plan (a
     * count()-eliminated unique-key join or pruned projection audits as
     * an empty scan and benches a no-op). bit_xor, not sum: summing
     * 64-bit hashes overflows under ANSI; xor is closed over Long and

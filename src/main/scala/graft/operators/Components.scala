@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.obs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -182,7 +183,6 @@ object Components {
     * of the nodes appearing in `g`.
     */
   private def propagateToFixpoint(g: DataFrame, maxRounds: Int,
-                                  dbg: (String, Long) => Unit,
                                   eagerControl: Boolean = false): (DataFrame, Long) = {
     // LAZY localCheckpoint throughout the loop. Under AQE the checkpoint
     // call still materializes the plan's shuffle stages (execute() on an
@@ -208,7 +208,6 @@ object Components {
     var round = 0
     var converged = nNodes == 0L
     while (!converged) {
-      val tr = System.nanoTime()
       if (round >= maxRounds)
         throw new IllegalStateException(
           s"connectedComponents did not converge in $maxRounds rounds")
@@ -235,7 +234,6 @@ object Components {
       prevSum = s
       labels = jumped
       round += 1
-      dbg(s"remnant round$round", tr)
     }
     (labels, nNodes)
   }
@@ -256,9 +254,6 @@ object Components {
   private[graft] def connectedComponentsImpl(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int, eagerControl: Boolean): DataFrame = {
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    def dbg(label: String, t0: Long): Unit = if (debug)
-      println(f"[cc] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
     // Persist the one-directional edges BEFORE symmetrizing: the union's
     // two branches would otherwise each evaluate the upstream pair
     // generation (a dedup candidate pipeline is the typical input —
@@ -276,31 +271,30 @@ object Components {
     // repeat an offer that map-side combine collapses.
     val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
     try {
-      val t0 = System.nanoTime()
       // One count of the persisted edge set prices the algorithm choice
       // (and doubles as the cache fill the first fixpoint action paid
-      // before). eagerControl pins the distributed path — it is the
-      // checkpoint-mode test knob and must measure the fixpoint.
+      // before). It runs under the caller's phase, not an arm's: filling
+      // the cache evaluates the caller's edge plan. eagerControl pins the
+      // distributed path — it is the checkpoint-mode test knob and must
+      // measure the fixpoint.
       val eCount = e.count()
-      if (!eagerControl && eCount <= localCcMaxEdges(e)) {
+      val local = !eagerControl && eCount <= localCcMaxEdges(e)
+      if (local) obs.phase("cc.union_find") {
         // Single-task union-find (see localCcMaxEdges). Checkpointed
         // eagerly: downstream consumers (health checks read the labeling
         // 2-3×) get the materialized result, and `e` can unpersist.
-        val labels = localCc(e).localCheckpoint(eager = true)
-        dbg(s"local union-find ($eCount edges)", t0)
-        labels
-      } else {
+        localCc(e).localCheckpoint(eager = true)
+      } else obs.phase("cc.fixpoint") {
         val m0 = starMin(sym).localCheckpoint()
         // materialized by the checkpoint, so this is a cheap cache scan;
         // it prices the broadcast decision for the two contract lookups
         val nNodes = m0.count()
         val remnant = contract(sym, m0, nNodes).localCheckpoint()
-        dbg("star-merge + contract", t0)
         val labels =
           if (remnant.isEmpty) m0
           else {
             val (fix, nRem) =
-              propagateToFixpoint(remnant, maxRounds, dbg, eagerControl)
+              propagateToFixpoint(remnant, maxRounds, eagerControl)
             applyMap(m0, fix, nRem)
           }
         labels.select(col("node").as("id"), col("comp").as("component"))
@@ -364,7 +358,8 @@ object Components {
     * @return (id, component) over old ∪ new nodes
     */
   def incrementalComponents(oldLabels: DataFrame, newEdges: DataFrame,
-                            srcCol: String, dstCol: String): DataFrame = {
+                            srcCol: String, dstCol: String): DataFrame =
+    obs.phase("cc.incremental") {
     val star = oldLabels.select(col("id").as("__s"),
       col("component").as("__d"))
     val nw = newEdges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
@@ -401,7 +396,7 @@ object Components {
     */
   def boundedHops(edges: DataFrame, srcCol: String, dstCol: String,
                   seeds: DataFrame, seedCol: String,
-                  maxHops: Int): DataFrame = {
+                  maxHops: Int): DataFrame = obs.phase("bfs") {
     require(maxHops >= 0, "negative hop bound")
     // ONE exchange for the adjacency, partitioned by the probe key u
     // (hash(u) co-locates every (u, v) copy, so the dedup aggregate

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.obs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -737,7 +738,8 @@ object Dedup {
     */
   private def guardedIncremental(batch: DataFrame, corpus: DataFrame,
                                  nib: Int => Column, maxHamming: Int,
-                                 maxOccupancy: Int): DataFrame = {
+                                 maxOccupancy: Int): DataFrame =
+    obs.phase("dedup.guarded_incremental") {
     // exact cross: one representative edge per matched batch id
     val corpusMin = corpus.groupBy(col("__sig"))
       .agg(min(col("__id")).as("__cmin"))
@@ -1141,7 +1143,8 @@ object Dedup {
     * AND the banded self-join).
     */
   private def guardedSelfPairs(withSig: DataFrame, nib: Int => Column,
-                               maxHamming: Int, maxOccupancy: Int): DataFrame = {
+                               maxHamming: Int, maxOccupancy: Int): DataFrame =
+    obs.phase("dedup.guarded_self_pairs") {
     val star = withSig
       .groupBy(col("__sig"))
       .agg(min(col("__id")).as("__mn"), count(lit(1)).as("__n"))

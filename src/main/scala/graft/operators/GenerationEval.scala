@@ -340,7 +340,7 @@ object GenerationEval {
     * but left ~12 interpreted transform/sort_array evaluations per
     * row — HOFs never enter whole-stage codegen — and still topped the
     * bench at ~17 s; this kernel runs the same math in ~1 s
-    * (measured sf0.1, QueryBench). Orders where both sides are empty
+    * (measured sf0.1, per-query wall). Orders where both sides are empty
     * emit no entry, keeping the original long-format contract; the
     * HOF formulation survives as [[chrFRow]], the streaming twin and
     * executable spec the suite pins this kernel against.

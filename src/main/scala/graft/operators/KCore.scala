@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.obs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -46,7 +47,7 @@ object KCore {
     *         empty when the graph has no k-core
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
-            k: Int, rounds: Int = 32): DataFrame = {
+            k: Int, rounds: Int = 32): DataFrame = obs.phase("kcore") {
     require(k >= 1 && rounds >= 1)
     val spark = edges.sparkSession
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.obs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -40,7 +41,7 @@ object LabelProp {
     *         operator here
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       rounds: Int): DataFrame = {
+                       rounds: Int): DataFrame = obs.phase("lpa") {
     require(rounds >= 1, "need at least one round")
     val und = edges
       .select(col(srcCol).cast(LongType).as("a"), col(dstCol).cast(LongType).as("b"))
@@ -115,7 +116,7 @@ object LabelProp {
     * @return (label, n_nodes, d_sum, e_in, m, q_num, q_contrib)
     */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
-                 labels: DataFrame): DataFrame = {
+                 labels: DataFrame): DataFrame = obs.phase("modularity") {
     val und = edges
       .select(col(srcCol).cast(LongType).as("a"), col(dstCol).cast(LongType).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))

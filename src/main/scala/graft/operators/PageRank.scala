@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.obs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -75,7 +76,8 @@ object PageRank {
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int, scale: Long = 1000000000000L,
-               dampNum: Long = 17L, dampDen: Long = 20L): DataFrame = {
+               dampNum: Long = 17L, dampDen: Long = 20L): DataFrame =
+    obs.phase("pagerank") {
     require(iterations >= 0, "iterations must be non-negative")
     require(scale > 0 && dampNum >= 0 && dampDen > 0 && dampNum <= dampDen,
       "damping must be a fraction in [0,1] with positive scale")
@@ -110,43 +112,44 @@ object PageRank {
       .localCheckpoint(eager = true)
     val n = nd.count()
     if (n == 0L) // empty graph → empty result, like Triangles/KCore
-      return edges.sparkSession.emptyDataFrame
+      edges.sparkSession.emptyDataFrame
         .select(lit(0L).as("node"), lit(0L).as("pr_fixed"),
           lit(0.0).as("pr")).limit(0)
-
-    val base = ((dampDen - dampNum) * scale) / (dampDen * n)
-    var pr = nd.withColumn("pr", lit(scale / n))
-    for (_ <- 1 to iterations) {
-      // The dangling mass stays IN-PLAN as a one-row broadcast instead
-      // of a per-iteration driver-blocking head(): the only scalar the
-      // loop truly needs on the driver is n, known up front — the old
-      // shape paid one extra full scheduler round-trip per iteration
-      // (guide §5: the driver should do no data work). `__dangling DIV n`
-      // over non-negative BIGINTs is exactly the old Scala `dangling / n`,
-      // so the fixed-point arithmetic is bit-identical.
-      val dangling = pr.filter(col("odeg") === 0L)
-        .agg(coalesce(sum(col("pr")), lit(0L)).as("__dangling"))
-      // The rank table is a checkpointed leaf (stats-less), so without
-      // a hint the join sort-merges — sorting the co-partitioned edge
-      // table every iteration. Node count n is exact and already on the
-      // driver: broadcast the rank side when it fits
-      // (Components.maybeBcast; above the cap the old shape returns).
-      val contrib = ewd
-        .join(Components.maybeBcast(
-          pr.select(col("node").as("src"), col("pr").as("__p")), n), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(expr("__p DIV odeg")).as("__c"))
-      pr = nd
-        .join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("odeg"),
-          expr(s"CAST($base AS BIGINT) + (CAST($dampNum AS BIGINT) * " +
-            s"(coalesce(__c, CAST(0 AS BIGINT)) + " +
-            s"(__dangling DIV CAST($n AS BIGINT))))" +
-            s" DIV CAST($dampDen AS BIGINT)").as("pr"))
-        .localCheckpoint(eager = false)
+    else {
+      val base = ((dampDen - dampNum) * scale) / (dampDen * n)
+      var pr = nd.withColumn("pr", lit(scale / n))
+      for (_ <- 1 to iterations) {
+        // The dangling mass stays IN-PLAN as a one-row broadcast instead
+        // of a per-iteration driver-blocking head(): the only scalar the
+        // loop truly needs on the driver is n, known up front — the old
+        // shape paid one extra full scheduler round-trip per iteration
+        // (guide §5: the driver should do no data work). `__dangling DIV n`
+        // over non-negative BIGINTs is exactly the old Scala `dangling / n`,
+        // so the fixed-point arithmetic is bit-identical.
+        val dangling = pr.filter(col("odeg") === 0L)
+          .agg(coalesce(sum(col("pr")), lit(0L)).as("__dangling"))
+        // The rank table is a checkpointed leaf (stats-less), so without
+        // a hint the join sort-merges — sorting the co-partitioned edge
+        // table every iteration. Node count n is exact and already on the
+        // driver: broadcast the rank side when it fits
+        // (Components.maybeBcast; above the cap the old shape returns).
+        val contrib = ewd
+          .join(Components.maybeBcast(
+            pr.select(col("node").as("src"), col("pr").as("__p")), n), "src")
+          .groupBy(col("dst").as("node"))
+          .agg(sum(expr("__p DIV odeg")).as("__c"))
+        pr = nd
+          .join(contrib, Seq("node"), "left")
+          .crossJoin(broadcast(dangling))
+          .select(col("node"), col("odeg"),
+            expr(s"CAST($base AS BIGINT) + (CAST($dampNum AS BIGINT) * " +
+              s"(coalesce(__c, CAST(0 AS BIGINT)) + " +
+              s"(__dangling DIV CAST($n AS BIGINT))))" +
+              s" DIV CAST($dampDen AS BIGINT)").as("pr"))
+          .localCheckpoint(eager = false)
+      }
+      pr.select(col("node"), col("pr").as("pr_fixed"),
+        (col("pr").cast(DoubleType) / lit(scale.toDouble)).as("pr"))
     }
-    pr.select(col("node"), col("pr").as("pr_fixed"),
-      (col("pr").cast(DoubleType) / lit(scale.toDouble)).as("pr"))
   }
 }

@@ -4803,7 +4803,7 @@ object LlmQueries {
     }),
 
     // The graph HEALTH-CHECK composed as ONE plan (round-14 task 6's
-    // adoption: the A/B audit — tools/GraphEdgeCacheAudit, SCALE.md —
+    // adoption: the A/B audit — SCALE.md, "graph-tier shared-edge-cache A/B" —
     // measured a 33% tier-wall cut from sharing the derived edge table
     // across the datasheet / hub-removal / BFS reads, hashes green; the
     // per-query gates stay isolated for measurement honesty, and THIS

@@ -725,14 +725,6 @@ object RelationalQueries {
     * corpus-sized groups. Ties break on exact decimals, then the key, so
     * the edge SET is deterministic and oracle-reproducible.
     */
-  /** [[purchaseGraph]] exposed for the shared-edge-cache audit
-    * (tools/GraphEdgeCacheAudit) — the EXACT plan the graph queries
-    * build, so a persist here substitutes into them via the
-    * CacheManager's canonicalized-subtree match.
-    */
-  private[graft] def purchaseGraphFor(s: SparkSession, dir: String): DataFrame =
-    purchaseGraph(s, dir)
-
   private def purchaseGraph(s: SparkSession, dir: String): DataFrame = {
     val j = t(s, dir, "lineitem")
       .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))

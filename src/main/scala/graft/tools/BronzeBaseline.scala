@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 /** Like-for-like local measure for the reference's ONLY wall-clock
   * artifact: the bronze notebook's ~1h25m for 4,482,432 bronze rows
   * from 913 station files (/root/reference/notebooks/logs/02.output:45,
@@ -16,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * ONE multi-path text scan (etl/Bronze.scala:37-48), the same parse/
   * explode/cull semantics, partitioned parquet write like the
   * reference's bronze table. Hardware differs from the blessed run
-  * (unspecified Databricks cluster vs local[32]); the number exists so
+  * (unspecified Databricks cluster vs local[n]); the number exists so
   * BASELINE.md has a defensible non-zero denominator for the
   * "matches-or-beats single-node throughput" gate, not as a cluster
   * claim.
@@ -38,14 +36,7 @@ import org.apache.spark.sql.SparkSession
 object BronzeBaseline {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     val base = Files.createTempDirectory("graft_bronze_baseline_")
     val dlyDir = base.resolve("dly")

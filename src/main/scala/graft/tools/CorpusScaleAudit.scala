@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the most expensive NON-graph queries (round-11 brief
@@ -31,8 +27,10 @@ import org.apache.spark.sql.functions._
   * SCALE.md.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  *   sbt -batch "runMain graft.tools.CorpusScaleAudit" 2>/dev/null | grep '^|'
-  * Env: SPARK_GRAFT_KREP (default 10), SPARK_GRAFT_ONLY=q47_...,q315_...
+  *   sbt -batch "runMain graft.tools.CorpusScaleAudit [q47_...,q315_...]" \
+  *     2>/dev/null | grep '^|'
+  * Env: SPARK_GRAFT_KREP (default 10). The optional argument replaces
+  * the default probe list.
   */
 object CorpusScaleAudit {
 
@@ -136,50 +134,14 @@ object CorpusScaleAudit {
     "q385_mjpeg_video_dedup")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = LocalSession.sfDir
     val krep = sys.env.getOrElse("SPARK_GRAFT_KREP", "10").toInt
-    val probes = sys.env.get("SPARK_GRAFT_ONLY")
+    val probes = args.headOption
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(DefaultProbes)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-    val shufRead = new AtomicLong
-    val shufWrite = new AtomicLong
-    val spill = new AtomicLong
-    val maxTaskRead = new AtomicLong
-    val taskCount = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          val r = m.shuffleReadMetrics.totalBytesRead
-          shufRead.addAndGet(r)
-          maxTaskRead.getAndUpdate(cur => math.max(cur, r))
-          spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          taskCount.incrementAndGet()
-        }
-        ()
-      }
-    })
-    def settle(): Unit = {
-      var stable = 0
-      var prev = -1L
-      while (stable < 5) {
-        val cur = taskCount.get
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        Thread.sleep(300)
-      }
-    }
+    val spark = LocalSession()
+    val listener = new Profile.Listener
+    spark.sparkContext.addSparkListener(listener)
 
     // ---- stage the KREP× corpus ----------------------------------
     val tmp = java.nio.file.Files.createTempDirectory("graft_scale_")
@@ -230,26 +192,25 @@ object CorpusScaleAudit {
       s"wall ratio /$krep |")
     println("|---|---|---|---|---|---|---|---|")
 
-    def once(name: String, dir: String): (Double, Long, Long, Long) = {
-      settle()
-      Seq(shufRead, shufWrite, spill, maxTaskRead).foreach(_.set(0L))
+    def once(name: String, dir: String): (Double, Profile.Counters) = {
       val fn = graft.SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      graft.operators.CacheScope.scoped(
-        graft.Bench.measure(name, fn(spark, dir)))
-      val wall = (System.nanoTime() - t0) / 1e9
-      settle()
-      (wall, shufRead.get, maxTaskRead.get, spill.get)
+      listener.record(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        graft.operators.CacheScope.scoped(
+          graft.Bench.measure(name, fn(spark, dir)))
+        (System.nanoTime() - t0) / 1e9
+      }
     }
     def mb(b: Long): String = f"${b / 1048576.0}%.1f"
 
     probes.foreach { name =>
-      val small = once(name, sfDir)
-      val big = once(name, bigDir)
-      val ratio = big._1 / (small._1 * krep)
-      println(f"| $name | ${small._1}%.1f | ${big._1}%.1f | " +
-        s"${mb(small._2)} | ${mb(big._2)} | ${mb(big._3)} | " +
-        f"${mb(big._4)} | $ratio%.2f |")
+      val (wallSmall, small) = once(name, sfDir)
+      val (wallBig, big) = once(name, bigDir)
+      val ratio = wallBig / (wallSmall * krep)
+      println(f"| $name | $wallSmall%.1f | $wallBig%.1f | " +
+        s"${mb(small.shuffleRead)} | ${mb(big.shuffleRead)} | " +
+        s"${mb(big.maxTaskShuffleRead)} | " +
+        f"${mb(big.spill)} | $ratio%.2f |")
     }
 
     // clean the staged fixture (the q290/q291 leak discipline)

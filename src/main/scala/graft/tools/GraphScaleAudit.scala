@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the iterative graph tier (round-10 task: the sf0.1
@@ -17,7 +13,7 @@ import org.apache.spark.sql.functions._
   * x % 97 == 0) — degree distribution preserved, nodes/edges/giant all
   * ~10×, exactly the growth pattern a 10× corpus produces for a
   * near-dup pair graph. Runs CC (the pointer-jumping fixpoint), LPA,
-  * and bounded BFS over it with the ShuffleAudit listener and prints
+  * and bounded BFS over it with Profile's listener and prints
   * the same markdown rows (paste into SHUFFLE_AUDIT.md §sf1).
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
@@ -26,53 +22,12 @@ import org.apache.spark.sql.functions._
 object GraphScaleAudit {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = LocalSession.sfDir
     val krep = sys.env.getOrElse("SPARK_GRAFT_KREP", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val shufWrite = new AtomicLong
-    val shufRead = new AtomicLong
-    val spillMem = new AtomicLong
-    val spillDisk = new AtomicLong
-    val maxTaskRead = new AtomicLong
-    val taskCount = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          val r = m.shuffleReadMetrics.totalBytesRead
-          shufRead.addAndGet(r)
-          maxTaskRead.getAndUpdate(cur => math.max(cur, r))
-          spillMem.addAndGet(m.memoryBytesSpilled)
-          spillDisk.addAndGet(m.diskBytesSpilled)
-          taskCount.incrementAndGet()
-        }
-        ()
-      }
-    })
-    // Quiescence = the task-end counter unchanged for FIVE consecutive
-    // 300ms polls (ADVICE r10: one unchanged poll lets a single task
-    // running >300ms between probes escape, mis-attributing its metrics
-    // to the next probe row; local[n] tasks rarely exceed 1.5s of silent
-    // non-completion, and probes are seconds apart so the extra wait is
-    // noise).
-    def settle(): Unit = {
-      var stable = 0
-      var prev = -1L
-      while (stable < 5) {
-        val cur = taskCount.get
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        Thread.sleep(300)
-      }
-    }
+    val spark = LocalSession()
+    val cpus = spark.sparkContext.defaultParallelism
+    val listener = new Profile.Listener
+    spark.sparkContext.addSparkListener(listener)
     def mb(b: Long): String = f"${b / 1048576.0}%.1f"
 
     val off = 10000000L
@@ -103,14 +58,10 @@ object GraphScaleAudit {
     println("|---|---|---|---|---|---|---|")
 
     def probe(name: String)(body: => Long): Unit = {
-      settle()
-      Seq(shufWrite, shufRead, spillMem, spillDisk, maxTaskRead).foreach(_.set(0L))
-      val rows = body
-      settle()
-      val fair = shufRead.get / cpus.toInt
-      println(s"| $name | ${mb(shufWrite.get)} | ${mb(shufRead.get)} | " +
-        s"${mb(maxTaskRead.get)} | ${mb(fair)} | " +
-        s"${mb(spillMem.get + spillDisk.get)} | $rows |")
+      val (rows, c) = listener.record(spark.sparkContext)(body)
+      println(s"| $name | ${mb(c.shuffleWrite)} | ${mb(c.shuffleRead)} | " +
+        s"${mb(c.maxTaskShuffleRead)} | ${mb(c.shuffleRead / cpus)} | " +
+        s"${mb(c.spill)} | $rows |")
     }
 
     probe(s"cc_${krep}x") {

@@ -1,21 +1,17 @@
 package graft.tools
 
 import graft.operators.{LinearModel, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off deterministic training run for the q102 distilled gate
   * classifier — prints the learned raw-space weights that q102 embeds
-  * as literals (provenance documented there).
+  * as literals (provenance documented there). The weights were trained
+  * at eight cores:
+  *   SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.tools.TrainDistill"
   */
 object TrainDistill {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]").appName("train-distill")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "8")
-      .getOrCreate()
+    val spark = LocalSession()
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val labeled = TextAnalysis.qualityGate(docs, "doc_id", "text",
       keepInputCols = true)
