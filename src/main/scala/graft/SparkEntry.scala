@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{LlmQueries, RelationalQueries}
+import graft.queries.QueryRegistry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,11 +30,11 @@ object SparkEntry {
 
   /** One entry per implemented operator family from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ LlmQueries.queries
+    QueryRegistry.all.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
   def oracleSql: Map[String, String] =
-    RelationalQueries.oracles ++ LlmQueries.oracles
+    QueryRegistry.all.map(q => q.name -> q.oracle).toMap
 }

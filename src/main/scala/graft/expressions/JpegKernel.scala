@@ -99,7 +99,7 @@ object JpegKernel {
     def bit(): Int = {
       if (n == 0) {
         if (pos >= b.length) { bad = true; return 0 }
-        var v = b(pos) & 0xFF; pos += 1
+        val v = b(pos) & 0xFF; pos += 1
         if (v == 0xFF) {
           if (pos >= b.length) { bad = true; return 0 }
           val m = b(pos) & 0xFF

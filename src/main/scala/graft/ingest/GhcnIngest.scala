@@ -79,13 +79,12 @@ object GhcnIngest {
 
   /** Spark-side stations parse for the target-state ID set — replaces the
     * reference's driver-side line loop (file_extractor.py:16-36) with the
-    * same fixed-width semantics as the silver parse.
+    * silver parse itself ([[graft.etl.Silver.parseStations]]), so the
+    * fixed-width layout is defined once.
     */
   def stationIdsForState(spark: SparkSession, stationsFile: String,
                          targetState: String): Set[String] =
-    spark.read.text(stationsFile)
-      .select(trim(substring(col("value"), 1, 11)).as("ID"),
-        trim(substring(col("value"), 39, 2)).as("STATE"))
+    graft.etl.Silver.parseStations(spark.read.text(stationsFile))
       .filter(col("STATE") === targetState)
       .select("ID").distinct()
       .collect().map(_.getString(0)).toSet

@@ -62,10 +62,6 @@ object TableIO {
     partitioned.save(path)
   }
 
-  /** notebooks/04_gold_processing.py:148-155 — coalesced parquet export. */
-  def exportParquet(df: DataFrame, path: String, numFiles: Int = 1): Unit =
-    df.coalesce(numFiles).write.mode("overwrite").parquet(path)
-
   /** Bucketed managed table write: pre-shuffles data into `numBuckets` by
     * `bucketCols` ONCE at write time, so every later equi-join or
     * aggregation on those columns reads co-located buckets and skips its

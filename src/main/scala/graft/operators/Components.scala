@@ -3,7 +3,7 @@ package graft.operators
 import graft.obs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType}
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list — the step that turns
@@ -74,6 +74,20 @@ object Components {
   private def bcastMaxRows(df: DataFrame): Long =
     df.sparkSession.conf.get("spark.graft.graph.broadcastMaxRows",
       "4000000").toLong
+
+  /** The simple undirected edge set `(u, v)` with u < v of
+    * `edges(srcCol, dstCol)`: ids cast to long, NULL ends and self-loops
+    * dropped, each edge once whatever its direction or multiplicity.
+    * The input normalization of LabelProp, modularity, KCore and
+    * Triangles.
+    */
+  private[operators] def undirectedEdges(edges: DataFrame, srcCol: String,
+                                         dstCol: String): DataFrame =
+    edges
+      .select(col(srcCol).cast(LongType).as("a"), col(dstCol).cast(LongType).as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
+      .distinct()
 
   /** Whether a `rows`-row table is under the measured-size broadcast
     * cap — exposed so iterative operators can condition LAYOUT choices
@@ -183,7 +197,7 @@ object Components {
     * of the nodes appearing in `g`.
     */
   private def propagateToFixpoint(g: DataFrame, maxRounds: Int,
-                                  eagerControl: Boolean = false): (DataFrame, Long) = {
+                                  eagerControl: Boolean): (DataFrame, Long) = {
     // LAZY localCheckpoint throughout the loop. Under AQE the checkpoint
     // call still materializes the plan's shuffle stages (execute() on an
     // adaptive plan runs its query stages), so laziness does NOT defer

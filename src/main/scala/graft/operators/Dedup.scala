@@ -404,10 +404,6 @@ object Dedup {
     * ≥1 band w.p. 1-(1-J^r)^(k/r) ≈ 1; the bucket join shuffles by
     * (band, bandKey) — no cartesian product anywhere.
     */
-  def minhashBands(docs: DataFrame, idCol: String, textCol: String,
-                   n: Int, numHashes: Int, bandRows: Int): DataFrame =
-    minhashBandsOf(shingleSets(docs, idCol, textCol, n), numHashes, bandRows)
-
   private def minhashBandsOf(sets: DataFrame, numHashes: Int,
                              bandRows: Int): DataFrame = {
     val ex = sets.select(col("__id"), explode(col("__set")).as("__sh"))

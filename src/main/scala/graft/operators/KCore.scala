@@ -3,7 +3,6 @@ package graft.operators
 import graft.obs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** k-core extraction over an undirected simple graph — the fourth graph
   * primitive next to [[Components]], [[PageRank]] and [[Triangles]]: the
@@ -56,11 +55,7 @@ object KCore {
         .unionAll(und.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
 
-    var und = edges
-      .select(col(srcCol).cast(LongType).as("a"), col(dstCol).cast(LongType).as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
+    var und = Components.undirectedEdges(edges, srcCol, dstCol)
       .localCheckpoint(eager = true)
     var edgeCount = und.count()
     var round = 0

@@ -3,7 +3,6 @@ package graft.operators
 import graft.obs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Synchronous label propagation (LPA, Raghavan–Albert–Kumara) over an
   * undirected simple graph — the community-detection primitive next to
@@ -43,11 +42,7 @@ object LabelProp {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int): DataFrame = obs.phase("lpa") {
     require(rounds >= 1, "need at least one round")
-    val und = edges
-      .select(col(srcCol).cast(LongType).as("a"), col(dstCol).cast(LongType).as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
+    val und = Components.undirectedEdges(edges, srcCol, dstCol)
     // The edge set is materialized once; the label spine and the node
     // count are derived from it BEFORE the adjacency layout is chosen.
     val undCp = und.localCheckpoint(eager = true)
@@ -117,11 +112,7 @@ object LabelProp {
     */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  labels: DataFrame): DataFrame = obs.phase("modularity") {
-    val und = edges
-      .select(col(srcCol).cast(LongType).as("a"), col(dstCol).cast(LongType).as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
+    val und = Components.undirectedEdges(edges, srcCol, dstCol)
     // Measured-size broadcast of the label table into its three lookup
     // joins (Components.maybeBcast): callers pass a checkpointed LPA
     // labeling whose leaf carries no stats, so the planner would

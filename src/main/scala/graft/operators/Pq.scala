@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -130,9 +130,7 @@ object Pq {
                       codebooks: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 0)
     val spark = corpus.sparkSession
-    import spark.implicits._
     var cb = collectCodebooks(codebooks)
-    val m = cb.length
     val sub = cb(0)(0).length
     for (_ <- 0 until iterations) {
       val cbDf = cbToDf(spark, cb)

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Per-node triangle counting and local clustering coefficient over an
   * undirected simple graph — with [[Components]] (cluster extraction) and
@@ -60,11 +60,7 @@ object Triangles {
     *          an exact small-integer ratio, bit-portable across engines)
     */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val und = edges
-      .select(col(srcCol).cast(LongType).as("a"), col(dstCol).cast(LongType).as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
+    val und = Components.undirectedEdges(edges, srcCol, dstCol)
 
     val deg = und.select(col("u").as("node"))
       .unionAll(und.select(col("v").as("node")))

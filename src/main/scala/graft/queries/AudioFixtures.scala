@@ -8,7 +8,7 @@ package graft.queries
   */
 private[graft] object AudioFixtures {
 
-  /** q367/q375's dedup WAV payload — the COMPILED twin of LlmQueries'
+  /** q367/q375's dedup WAV payload — the COMPILED twin of MediaDedupQueries'
     * `audioDedupPayload` Catalyst expression (round 18, guide §1.2
     * step 2: the hex-string expression tree built every sample as a
     * 16-char lpad/concat/substring chain and dominated the queries'

@@ -1,7 +1,7 @@
 package graft.queries
 
 /** Constructed pixel payloads for the q342/q343-family gates — the
-  * [[LlmQueries]] `mediaPayload` discipline taken down to PIXELS: every
+  * [[MediaQueries]] `mediaPayload` discipline taken down to PIXELS: every
   * image is built from doc_id arithmetic the DuckDB oracle replays
   * without ever touching a byte, and the CONSTRUCTION direction shares
   * no code with the decode kernel ([[graft.expressions.PixelKernel]]):

@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.functions._
+import QueryKit._
 
 /** Driver-contract queries covering every relational operator family of
   * SURVEY.md §2 over the synthetic TPC-H-ish testdata, each with an ANSI-SQL
@@ -25,9 +26,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   *     would otherwise mismatch the schema).
   */
 object RelationalQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** events with ts as nanos-since-epoch Long regardless of the on-disk
     * timestamp layout — see [[graft.io.TableIO.eventsNanos]]. Ordering by
@@ -59,13 +57,14 @@ object RelationalQueries {
 
   /** Oracle-side spellings of the same two patterns. */
   private def oSum(x: String) = s"CAST(sum(CAST($x AS DECIMAL(18,2))) AS DOUBLE)"
+
   private def oAvg(x: String) = s"${oSum(x)} / count($x)"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val all: Seq[Query] = Seq(
     // P1/P4/S10: fixed-width round-trip — build a fixed-width line with
     // lpad/rpad/concat, parse it back with literal-offset substring+trim+cast
     // (the .dly/stations parse shape, SURVEY §2.2 P1 / §2.1 S10).
-    "q01_fixed_width" -> ((s, dir) => {
+    Query("q01_fixed_width", (s, dir) => {
       val line = concat(
         lpad(col("o_orderkey").cast("string"), 12, "0"),
         rpad(col("o_orderpriority"), 16, " "),
@@ -79,21 +78,40 @@ object RelationalQueries {
         .groupBy("priority", "yr")
         .agg(count(lit(1)).as("cnt"), min("okey").as("min_key"), max("okey").as("max_key"))
         .orderBy("priority", "yr")
-    }),
+    },
+    oracle =
+      """WITH lines AS (
+        |  SELECT lpad(CAST(o_orderkey AS VARCHAR), 12, '0')
+        |      || rpad(o_orderpriority, 16, ' ')
+        |      || lpad(CAST(year(o_orderdate) AS VARCHAR), 4, '0') AS line
+        |  FROM orders),
+        |parsed AS (
+        |  SELECT CAST(substring(line, 1, 12) AS BIGINT) AS okey,
+        |         trim(substring(line, 13, 16)) AS priority,
+        |         CAST(substring(line, 29, 4) AS BIGINT) AS yr
+        |  FROM lines)
+        |SELECT priority, yr, CAST(count(*) AS BIGINT) AS cnt,
+        |       min(okey) AS min_key, max(okey) AS max_key
+        |FROM parsed GROUP BY priority, yr ORDER BY priority, yr""".stripMargin),
 
     // P2: substring with a COMPUTED offset (Column.substr(Column, Column)) —
     // the bronze per-day slice primitive (bronze_processor.py:98-119).
-    "q02_computed_substr" -> ((s, dir) => {
+    Query("q02_computed_substr", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"),
           col("text").substr((col("doc_id") % 7 + 1).cast("int"), lit(12)).as("frag"))
         .withColumn("frag_len", length(col("frag")).cast(LongType))
         .orderBy("doc_id")
-    }),
+    },
+    oracle =
+      """SELECT doc_id,
+        |       substring(text, CAST(doc_id % 7 + 1 AS INT), 12) AS frag,
+        |       CAST(length(substring(text, CAST(doc_id % 7 + 1 AS INT), 12)) AS BIGINT) AS frag_len
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // P3: NULL-on-bad-cast (try_cast) — ANSI-safe reference semantics
     // (bronze_processor.py:54,112); plus regexp extraction.
-    "q03_try_cast" -> ((s, dir) => {
+    Query("q03_try_cast", (s, dir) => {
       events(s, dir)
         .select(col("event_type"),
           graft.functions.tryCast(regexp_extract(col("props"), "[0-9]+", 0), LongType).as("k"),
@@ -103,11 +121,16 @@ object RelationalQueries {
           sum(col("k")).as("sum_k"),
           sum(when(col("bad").isNull, 1).otherwise(0)).as("bad_nulls"))
         .orderBy("event_type")
-    }),
+    },
+    oracle =
+      """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
+        |       CAST(sum(TRY_CAST(regexp_extract(props, '[0-9]+', 0) AS BIGINT)) AS BIGINT) AS sum_k,
+        |       CAST(sum(CASE WHEN TRY_CAST(event_type AS BIGINT) IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS bad_nulls
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // P6/P7/P8/P9: CASE WHEN chain + isin + between + null predicate
     // (silver_processor.py:52-70, gold_processor.py:167-178).
-    "q04_case_buckets" -> ((s, dir) => {
+    Query("q04_case_buckets", (s, dir) => {
       t(s, dir, "lineitem")
         .select(
           when(col("l_quantity") >= 40, "high")
@@ -122,11 +145,21 @@ object RelationalQueries {
           sum("l_quantity").as("sum_qty"),
           sum(when(col("tax_or_null").isNull, 1).otherwise(0)).as("zero_tax_cnt"))
         .orderBy("bucket", "mid_discount")
-    }),
+    },
+    oracle =
+      """SELECT CASE WHEN l_quantity >= 40 THEN 'high'
+        |            WHEN l_quantity >= 20 THEN 'mid'
+        |            WHEN l_returnflag IN ('A','R') THEN 'returned_low'
+        |            ELSE 'low' END AS bucket,
+        |       l_discount BETWEEN 0.02 AND 0.06 AS mid_discount,
+        |       CAST(count(*) AS BIGINT) AS cnt,
+        |       sum(l_quantity) AS sum_qty,
+        |       CAST(sum(CASE WHEN nullif(l_tax, 0.0) IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS zero_tax_cnt
+        |FROM lineitem GROUP BY 1, 2 ORDER BY bucket, mid_discount""".stripMargin),
 
     // G1+P5: explode(sequence(1,31)) day generator + date assembly with
     // try_to_date culling Feb-30-style slots (bronze_processor.py:67-96).
-    "q05_date_explode" -> ((s, dir) => {
+    Query("q05_date_explode", (s, dir) => {
       t(s, dir, "orders")
         .select(year(col("o_orderdate")).cast(LongType).as("y"),
           month(col("o_orderdate")).cast(LongType).as("m"))
@@ -140,21 +173,43 @@ object RelationalQueries {
           count(col("d")).as("n_valid"),
           sum(when(col("d").isNull, 1).otherwise(0)).as("n_invalid"))
         .orderBy("y", "m")
-    }),
+    },
+    oracle =
+      """SELECT CAST(year(o_orderdate) AS BIGINT) AS y,
+        |       CAST(month(o_orderdate) AS BIGINT) AS m,
+        |       CAST(count(*) AS BIGINT) AS n_slots,
+        |       CAST(count(CAST(try_strptime(
+        |           CAST(year(o_orderdate) AS VARCHAR)
+        |           || lpad(CAST(month(o_orderdate) AS VARCHAR), 2, '0')
+        |           || lpad(CAST(g.day AS VARCHAR), 2, '0'), '%Y%m%d') AS DATE)) AS BIGINT) AS n_valid,
+        |       CAST(sum(CASE WHEN try_strptime(
+        |           CAST(year(o_orderdate) AS VARCHAR)
+        |           || lpad(CAST(month(o_orderdate) AS VARCHAR), 2, '0')
+        |           || lpad(CAST(g.day AS VARCHAR), 2, '0'), '%Y%m%d') IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid
+        |FROM orders CROSS JOIN generate_series(1, 31) AS g(day)
+        |GROUP BY 1, 2 ORDER BY y, m""".stripMargin),
 
     // A1: pivot with an explicit value list (silver_processor.py:79-84);
     // missing (user,type) combos stay NULL exactly like Spark's pivot.
-    "q06_pivot_events" -> ((s, dir) => {
+    Query("q06_pivot_events", (s, dir) => {
       events(s, dir)
         .groupBy("user_id")
         .pivot("event_type", Seq("click", "view", "signup", "error", "purchase"))
         .agg(count(lit(1)))
         .orderBy("user_id")
-    }),
+    },
+    oracle =
+      """SELECT user_id,
+        |       CAST(sum(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT) AS click,
+        |       CAST(sum(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT) AS "view",
+        |       CAST(sum(CASE WHEN event_type = 'signup' THEN 1 END) AS BIGINT) AS signup,
+        |       CAST(sum(CASE WHEN event_type = 'error' THEN 1 END) AS BIGINT) AS error,
+        |       CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS purchase
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // A2/A3: wide multi-aggregate with conditional day-counts and
     // countDistinct (gold_processor.py:49-135).
-    "q07_agg_wide" -> ((s, dir) => {
+    Query("q07_agg_wide", (s, dir) => {
       t(s, dir, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -168,645 +223,8 @@ object RelationalQueries {
           countDistinct(col("l_orderkey")).as("n_orders"),
           sum(when(col("l_quantity") > 45, 1).otherwise(0)).as("big_qty_cnt"))
         .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // A4: sample stddev + countDistinct per group (gold_processor.py:137-164).
-    "q08_stddev_yearly" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(year(col("l_shipdate")).cast(LongType).as("y"))
-        .agg(round(stddev(col("l_extendedprice")), 2).as("std_price"),
-          round(stddev(col("l_quantity")), 4).as("std_qty"),
-          countDistinct(month(col("l_shipdate"))).as("n_months"),
-          count(lit(1)).as("cnt"))
-        .orderBy("y")
-    }),
-
-    // A6/A7: global min/max/avg single-row aggregate
-    // (bronze_processor.py:152-155, silver_processor.py:166-170).
-    "q09_global_stats" -> ((s, dir) => {
-      t(s, dir, "orders").agg(
-        to_date(min(col("o_orderdate"))).as("min_date"),
-        to_date(max(col("o_orderdate"))).as("max_date"),
-        min("o_totalprice").as("min_price"),
-        max("o_totalprice").as("max_price"),
-        davg(col("o_totalprice")).as("avg_price"),
-        count(lit(1)).as("cnt"),
-        countDistinct(col("o_custkey")).as("n_cust"))
-    }),
-
-    // A9+O2: frequency table with descending count sort
-    // (notebooks/05_data_validation.py:43).
-    "q10_freq_desc" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy("event_type").agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), col("event_type"))
-    }),
-
-    // A10: lineage cardinality — distinct (key, date) pair count
-    // (notebooks/05_data_validation.py:179-180).
-    "q11_lineage_pairs" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(col("user_id"), tsDate.as("d"))
-        .agg(count(lit(1)).as("c"))
-        .agg(count(lit(1)).as("pair_cnt"))
-    }),
-
-    // A11: describe()-shape summary stats (notebooks/05:64,98).
-    "q12_describe_stats" -> ((s, dir) => {
-      t(s, dir, "lineitem").agg(
-        count(col("l_quantity")).as("qty_count"),
-        (sum("l_quantity") / count("l_quantity")).as("qty_mean"),
-        round(stddev(col("l_quantity")), 4).as("qty_std"),
-        min("l_quantity").as("qty_min"),
-        max("l_quantity").as("qty_max"),
-        davg(col("l_extendedprice")).as("price_mean"),
-        round(stddev(col("l_extendedprice")), 2).as("price_std"),
-        min("l_extendedprice").as("price_min"),
-        max("l_extendedprice").as("price_max"))
-    }),
-
-    // A12: quantile IQR outlier bounds then outlier count
-    // (data_validator.py:99-115; exact percentile so the oracle can match).
-    // Fences are snapped to a 1e-6 grid on BOTH engines before the
-    // comparison: Spark percentile() and DuckDB quantile_cont interpolate
-    // with the same formula but can differ by ~1 ulp, and a data point
-    // lying exactly on an unrounded fence could flip the count.
-    "q13_iqr_outliers" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val q = li.agg(
-        percentile(col("l_extendedprice"), lit(0.25)).as("q1"),
-        percentile(col("l_extendedprice"), lit(0.75)).as("q3"))
-      val lo = round(col("q1") - (col("q3") - col("q1")) * 1.5, 6)
-      val hi = round(col("q3") + (col("q3") - col("q1")) * 1.5, 6)
-      li.crossJoin(q)
-        .agg(round(first(col("q1")), 2).as("q1_r"),
-          round(first(col("q3")), 2).as("q3_r"),
-          sum(when(col("l_extendedprice") < lo || col("l_extendedprice") > hi,
-            1).otherwise(0)).as("n_outliers"))
-    }),
-
-    // W1: lag over (partition, order) — row semantics (gold_processor.py:185-193).
-    "q14_window_lag" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      events(s, dir)
-        .select(col("event_id"), col("user_id"), col("value"),
-          lag(col("value"), 1).over(w).as("prev_value"),
-          (col("value") - lag(col("value"), 1).over(w)).as("delta"))
-        .orderBy("event_id")
-    }),
-
-    // W2: rolling 7-ROW frame sum/avg (gold_processor.py:195-199), exact via
-    // decimal window sum / frame row count.
-    "q15_window_rolling" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(-6, 0)
-      events(s, dir)
-        .select(col("event_id"),
-          sum(col("value").cast(DecimalType(18, 2))).over(w).cast(DoubleType).as("roll_sum"),
-          (sum(col("value").cast(DecimalType(18, 2))).over(w).cast(DoubleType) /
-            count(lit(1)).over(w)).as("roll_avg"))
-        .orderBy("event_id")
-    }),
-
-    // O1/O3/O4: global sort + limit + offset pagination (spark_utils.py:59-84).
-    "q16_topk_offset" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .orderBy(desc("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-        .offset(50).limit(100)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-    }),
-
-    // U1: position-based dup-preserving union (bronze_processor.py:35-38).
-    "q17_union_all" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val hi = o.filter(col("o_totalprice") > 150000)
-      val urgent = o.filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
-      hi.union(urgent)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("cnt"), dsum(col("o_totalprice")).as("sum_price"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // U2: set-difference lineage — keys present upstream but not downstream
-    // (notebooks/05_data_validation.py:183-187).
-    // Non-trivial difference: customers who never placed a high-value order.
-    "q18_except_lineage" -> ((s, dir) => {
-      t(s, dir, "customer").select(col("c_custkey"))
-        .except(t(s, dir, "orders").filter(col("o_totalprice") > 200000)
-          .select(col("o_custkey").as("c_custkey")))
-        .orderBy("c_custkey")
-    }),
-
-    // P13/P14: projection + distinct (bronze_processor.py:151-156).
-    "q19_distinct_proj" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_linestatus"),
-          month(col("l_shipdate")).cast(LongType).as("m"))
-        .distinct()
-        .orderBy("l_returnflag", "l_linestatus", "m")
-    }),
-
-    // J1: left equi-join with an explicitly broadcast dimension
-    // (silver_processor.py:116-119).
-    "q20_join_enrich" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .join(broadcast(t(s, dir, "customer")),
-          col("o_custkey") === col("c_custkey"), "left")
-        .groupBy(coalesce(col("c_mktsegment"), lit("<none>")).as("segment"))
-        .agg(count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("revenue"),
-          davg(col("c_acctbal")).as("avg_acctbal"),
-          countDistinct(col("o_custkey")).as("n_cust"))
-        .orderBy("segment")
-    }),
-
-    // Skew-mitigated join: salted equi-join (operators/Skew) — semantics
-    // identical to the plain join, so the oracle is plain SQL; the salt
-    // only changes the physical key distribution.
-    "q36_salted_join" -> ((s, dir) => {
-      val right = t(s, dir, "orders")
-        .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
-      graft.operators.Skew.saltedJoin(
-        t(s, dir, "lineitem"), right, Seq("l_orderkey"), saltFactor = 8)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("cnt"),
-          sum("l_quantity").as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_price"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // Skew-mitigated aggregation: two-phase salted sum (operators/Skew) —
-    // partials on (key, salt), final on key, so one dominant group's
-    // final reduce spreads across salt buckets. Result is salt-invariant,
-    // so the oracle is the plain GROUP BY; the value goes through
-    // DECIMAL(18,2) on both sides so the two-phase summation order
-    // cannot produce a float drift vs DuckDB's single-phase sum.
-    "q68_salted_agg" -> ((s, dir) => {
-      val in = t(s, dir, "lineitem")
-        .select(col("l_returnflag"),
-          col("l_quantity").cast(DecimalType(18, 2)).as("qty"))
-      graft.operators.Skew.saltedSum(in, Seq("l_returnflag"), "qty", saltFactor = 8)
-        .select(col("l_returnflag"),
-          col("sum_qty").cast(DoubleType).as("sum_qty"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Sessionization via session_window (the streaming operator, batch
-    // mode): 5-minute inactivity gap over second-truncated event times.
-    // Oracle: the classic gaps-and-islands formulation.
-    "q38_sessionize" -> ((s, dir) => {
-      events(s, dir)
-        .select(col("user_id"), col("value"),
-          timestamp_seconds(expr("ts DIV 1000000000")).as("t"))
-        .groupBy(session_window(col("t"), "5 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("session_value"))
-        .select(col("user_id"),
-          unix_timestamp(col("session_window.start")).as("session_start"),
-          col("n_events"), col("session_value"))
-        .orderBy("user_id", "session_start")
-    }),
-
-    // Backward as-of join (union+window, no inequality join): each event
-    // picks up the latest PRECEDING error of its user — the "state at
-    // event time" lookup. Right side pre-aggregated per (user, second) so
-    // the as-of match is unique.
-    "q44_asof_join" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_id"), col("user_id"),
-        expr("ts DIV 1000000000").as("t"), col("event_type"), col("value"))
-      val err = ev.filter(col("event_type") === "error")
-        .groupBy("user_id", "t").agg(max("value").as("err_value"))
-        .withColumn("err_t", col("t"))
-      graft.operators.AsofJoin.asofBackward(
-        ev.drop("event_type", "value"), err,
-        Seq("user_id"), "t", Seq("err_t", "err_value"))
-        .select("event_id", "user_id", "t", "err_t", "err_value")
-        .orderBy("event_id")
-    }),
-
-    // Range join via coarse-bucket overlay (equi-join on the bucket, then
-    // exact BETWEEN refine — no BroadcastNestedLoopJoin): lineitems
-    // shipped inside week-long windows anchored at a sparse order subset.
-    "q45_range_join" -> ((s, dir) => {
-      val iv = t(s, dir, "orders").filter(pmod(col("o_orderkey"), lit(97)) === 0)
-        .select(col("o_orderkey").as("iv_id"),
-          unix_date(col("o_orderdate").cast("date")).cast("long").as("lo"))
-        .withColumn("hi", col("lo") + 6)
-      val pts = t(s, dir, "lineitem").select(col("l_quantity"),
-        unix_date(col("l_shipdate").cast("date")).cast("long").as("p"))
-      graft.operators.RangeJoin.pointInInterval(pts, iv, "p", "lo", "hi",
-        bucketWidth = 7)
-        .groupBy("iv_id")
-        .agg(count(lit(1)).as("cnt"), sum("l_quantity").as("sum_qty"))
-        .orderBy("iv_id")
-    }),
-
-    // J2: join back to an aggregate of the same input (anomaly vs normals,
-    // gold_processor.py:211-225).
-    "q21_anomaly_join" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val normals = o.groupBy("o_custkey")
-        .agg(davg(col("o_totalprice")).as("cust_avg"))
-      o.join(normals, Seq("o_custkey"), "left")
-        .select(col("o_orderkey"), col("o_custkey"),
-          (col("o_totalprice") - col("cust_avg")).as("anomaly"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Changelog compaction: latest event per (user, type) via ONE hash
-    // aggregate (max over a (version, payload) struct) — the upsert/merge
-    // primitive, with no per-key sort window anywhere.
-    "q56_upsert_latest" -> ((s, dir) => {
-      // µs-truncated version: DuckDB's parquet reader truncates
-      // TIMESTAMP_NS to µs, so compare (and order) at µs precision.
-      graft.operators.Merge.latestByKey(
-        events(s, dir).select(col("user_id"), col("event_type"),
-          expr("ts DIV 1000").as("ts_us"), col("event_id"), col("value")),
-        keys = Seq("user_id", "event_type"), versionCols = Seq("ts_us", "event_id"))
-        .orderBy("user_id", "event_type")
-    }),
-
-    // Bloom-pruned join: lineitem rows are filtered by a broadcast Bloom
-    // filter of the urgent-order keys BEFORE the join shuffle; false
-    // positives die in the join, so the result equals the plain join.
-    "q57_bloom_semijoin" -> ((s, dir) => {
-      val urgent = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select("o_orderkey")
-      graft.operators.BloomPrune.bloomPrunedJoin(
-        t(s, dir, "lineitem"), "l_orderkey", urgent, "o_orderkey",
-        expectedItems = 20000L)
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("cnt"), sum("l_quantity").as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Snapshot diff (CDC shape): two deterministic order-table versions —
-    // keys % 4 = 0 only in the new snapshot, % 4 = 1 only in the old,
-    // % 3 = 0 repriced — full-outer join, unchanged keys dropped.
-    "q58_snapshot_diff" -> ((s, dir) => {
-      val orders = t(s, dir, "orders").select("o_orderkey", "o_totalprice")
-      val oldSnap = orders.filter(pmod(col("o_orderkey"), lit(4)) =!= 0)
-      val newSnap = orders.filter(pmod(col("o_orderkey"), lit(4)) =!= 1)
-        .withColumn("o_totalprice",
-          when(pmod(col("o_orderkey"), lit(3)) === 0, col("o_totalprice") + 10.0)
-            .otherwise(col("o_totalprice")))
-      graft.operators.Cdc.snapshotDiff(oldSnap, newSnap,
-        Seq("o_orderkey"), Seq("o_totalprice"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Per-group z-score normalization via aggregate-then-join (NO window
-    // over the group): moments are exact integer-valued sums, so the
-    // scores are bit-reproducible against the SQL oracle.
-    "q61_group_zscore" -> ((s, dir) => {
-      graft.operators.Normalize.zscoreByGroup(
-        t(s, dir, "lineitem")
-          .select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity"),
-        Seq("l_returnflag"), "l_quantity")
-        .select(col("l_orderkey"), col("l_linenumber").cast(LongType).as("l_linenumber"),
-          col("l_returnflag"), col("z"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // Z-order curve values (multi-dimensional data-layout clustering):
-    // pure bit-interleave arithmetic, reproduced literally in the oracle.
-    // Z-order EFFECTIVENESS, measured: the same 100-partkey range
-    // predicate pruned against zone maps of two layouts of the SAME
-    // rows — arrival order vs Z-order on (l_partkey, l_suppkey). The
-    // skip-ratio delta is the number q66's layout exists for.
-    "q226_zorder_benefit" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-      def layout(name: String, keyed: org.apache.spark.sql.DataFrame,
-                 bucket: Column, order: Seq[Column]) = {
-        val sharded = graft.operators.GlobalIds.shardByOrder(
-          keyed, bucket, order, shardSize = 1000)
-        val stats = graft.operators.Profiling.shardStats(sharded,
-          col("shard"), col("l_partkey"))
-        graft.operators.Profiling.pruneSimulation(stats, lit(100), lit(199))
-          .select(lit(name).as("layout"), col("n_shards"), col("n_pruned"),
-            col("n_scanned"), col("rows_skipped"), col("rows_total"),
-            col("skip_ratio"))
-      }
-      layout("arrival", li, expr("l_orderkey DIV 4096"),
-        Seq(col("l_orderkey"), col("l_linenumber")))
-        .unionByName(layout("zorder",
-          li.withColumn("__zv", graft.operators.Layout.zValue(12,
-            col("l_partkey"), col("l_suppkey"))),
-          expr("__zv DIV 4096"),
-          Seq(col("__zv"), col("l_orderkey"), col("l_linenumber"))))
-        .orderBy("layout")
-    }),
-
-    "q66_zorder" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey"),
-          graft.operators.Layout.zValue(16, col("l_partkey"), col("l_suppkey")).as("z"))
-        .orderBy("z", "l_partkey", "l_suppkey")
-        .limit(200)
-    }),
-
-    // Fixed-point PageRank (operators/PageRank.scala) over the sparse
-    // derived purchase graph ([[purchaseGraph]]). All rank arithmetic is
-    // BIGINT in 1e-12 units, so the 8-round power iteration is
-    // bit-identical under any partitioning — which is what lets a
-    // parallel graph algorithm hash-match a sequential SQL engine.
-    "q105_pagerank" -> ((s, dir) => {
-      graft.operators.PageRank.pageRank(purchaseGraph(s, dir), "src", "dst",
-        iterations = 8)
-        .orderBy("node")
-    }),
-
-    // Degree-ordered triangle counting + local clustering coefficient
-    // (operators/Triangles.scala) over the same purchase graph, read as
-    // undirected: a tripartite triangle is a closed c→s→p→c affinity
-    // loop (the customer's top supplier stocks a part whose top buyers
-    // include that customer). Exact integer counts; the coefficient is a
-    // small-integer ratio, so the double division is bit-portable.
-    "q106_triangles" -> ((s, dir) => {
-      graft.operators.Triangles.triangleCounts(purchaseGraph(s, dir),
-        "src", "dst")
-        .orderBy("node")
-    }),
-
-    // 4-core of the purchase graph (operators/KCore.scala). Every node
-    // has out-degree 3 by construction, so k=4 is the first level where
-    // peeling bites: only nodes that are also POPULAR (chosen by others'
-    // top-3 lists) survive, and their tendrils cascade away — measured
-    // fixpoint depth 3 at sf0.01, well inside the 8-round contract the
-    // oracle unrolls (extra rounds are no-ops; peeling is idempotent).
-    "q108_kcore" -> ((s, dir) => {
-      graft.operators.KCore.kCore(purchaseGraph(s, dir), "src", "dst",
-        k = 4, rounds = 8)
-        .orderBy("node")
-    }),
-
-    // Synchronous label-propagation communities (operators/LabelProp
-    // .scala) over the same purchase graph: 4 rounds of neighbor-label
-    // mode with min-label ties — dense affinity neighborhoods, where
-    // connected components (q47's machinery) would lump everything
-    // reachable into one piece. Exact integer votes; the fixed-round
-    // synchronous contract is what the oracle unrolls literally.
-    "q132_label_prop" -> ((s, dir) => {
-      graft.operators.LabelProp.labelPropagation(purchaseGraph(s, dir),
-        "src", "dst", rounds = 4)
-        .orderBy("node")
-    }),
-
-    // Modularity of q132's communities: per-community exact-BIGINT
-    // numerators 4m·e_c − d_c² over the shared 4m² denominator (Q = Σ
-    // num / 4m²) — the "did LPA find real structure" read, cells
-    // returned, statistic = their sum (the chi-squared discipline).
-    "q207_modularity" -> ((s, dir) => {
-      // cache the derived edge table: LPA checkpoints its own copy, but
-      // modularity's degree/intra-edge passes would otherwise recompute
-      // the purchase-graph joins+windows from scratch
-      val g = graft.operators.CacheScope.track(purchaseGraph(s, dir))
-      val labs = graft.operators.LabelProp.labelPropagation(g, "src", "dst",
-        rounds = 4)
-      graft.operators.LabelProp.modularity(g, "src", "dst", labs)
-        .orderBy("label")
-    }),
-
-    // Ordered funnel view → click → purchase within 24h of the first
-    // view (operators/EventAnalytics.scala): per-stage reach counts and
-    // average lag. Lags are floored to whole SECONDS per user before
-    // summing — the ns sums would pass 2^53 and double-round differently
-    // per engine; second-sums stay exact integers.
-    "q109_funnel" -> ((s, dir) => {
-      graft.operators.EventAnalytics.funnel(events(s, dir), "user_id", "ts",
-        "event_type", Seq("view", "click", "purchase"),
-        windowNs = 86400000000000L)
-        .withColumn("lag_s", expr("(ts - t1) DIV 1000000000"))
-        .groupBy("stage_idx", "stage")
-        .agg(count(lit(1)).as("users"),
-          (sum(col("lag_s")).cast(DoubleType) / count(lit(1))).as("avg_lag_s"))
-        .orderBy("stage_idx")
-    }),
-
-    // Weekly cohort retention (operators/EventAnalytics.scala): users
-    // cohorted by first-activity epoch-day, activity bucketed into
-    // 7-day offsets — all integer DIV arithmetic on epoch days, time
-    // zone independent by construction.
-    "q110_retention" -> ((s, dir) => {
-      graft.operators.EventAnalytics.retentionCohorts(events(s, dir),
-        "user_id", "ts", bucketDays = 7)
-        .orderBy("cohort", "offset")
-    }),
-
-    // INTERSECT + semi/anti joins — the set-op family's missing gates
-    // next to q17 (UNION ALL) and q18 (EXCEPT). Per nation: customers
-    // whose key set has BOTH urgent and finished orders (INTERSECT
-    // feeding a LEFT SEMI join) vs customers with NEITHER (LEFT ANTI
-    // against the distinct union). The key sets are order-key
-    // projections — orders of magnitude under the customer table — so
-    // both probes broadcast.
-    "q121_set_membership" -> ((s, dir) => {
-      val ords = t(s, dir, "orders")
-      val urgent = ords.filter(col("o_orderpriority") === "1-URGENT")
-        .select("o_custkey")
-      val fstat = ords.filter(col("o_orderstatus") === "F")
-        .select("o_custkey")
-      val both = urgent.intersect(fstat)
-      val either = urgent.union(fstat).distinct()
-      val cust = t(s, dir, "customer")
-      val nBoth = cust
-        .join(broadcast(both), col("c_custkey") === col("o_custkey"), "left_semi")
-        .groupBy(col("c_nationkey").cast(LongType).as("nation"))
-        .agg(count(lit(1)).as("n_both"))
-      val nNeither = cust
-        .join(broadcast(either), col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("c_nationkey").cast(LongType).as("nation"))
-        .agg(count(lit(1)).as("n_neither"))
-      nBoth.join(nNeither, Seq("nation"), "full_outer")
-        .select(col("nation"),
-          coalesce(col("n_both"), lit(0L)).as("n_both"),
-          coalesce(col("n_neither"), lit(0L)).as("n_neither"))
-        .orderBy("nation")
-    }),
-
-    // Unpivot/melt — the inverse of q06's pivot: four measure columns to
-    // (measure, val) rows via Spark's native unpivot (an Expand; the 4x
-    // fanout IS the operator's semantics, unlike the grouping-sets case
-    // where the cascade avoids it). Values pass through untouched, so
-    // doubles are bit-stable.
-    "q120_unpivot" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(pmod(col("l_orderkey"), lit(500)) === 0)
-        .select(col("l_orderkey").as("okey"),
-          col("l_linenumber").cast(LongType).as("line"),
-          col("l_quantity").as("quantity"),
-          col("l_extendedprice").as("extendedprice"),
-          col("l_discount").as("discount"),
-          col("l_tax").as("tax"))
-        .unpivot(Array(col("okey"), col("line")),
-          Array(col("quantity"), col("extendedprice"), col("discount"), col("tax")),
-          "measure", "val")
-        .orderBy("okey", "line", "measure")
-    }),
-
-    // Distribution-window showcase: rank / percent_rank / cume_dist /
-    // nth_value over one total order, plus a 7-DAY RANGE-frame running
-    // revenue (the ROWS-frame q15's calendar sibling — a range frame
-    // covers gaps and same-day ties by VALUE, which row frames cannot).
-    // Money sums go through DECIMAL(18,2) per the object-doc discipline;
-    // percent_rank/cume_dist are single exact divisions of rank counts.
-    // Both windows share the partition key, so one shuffle feeds both
-    // sorts.
-    "q119_window_suite" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .filter(pmod(col("o_orderkey"), lit(20)) === 0)
-        .select(col("o_orderpriority").as("prio"),
-          col("o_orderkey").as("okey"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price_d"),
-          unix_date(col("o_orderdate").cast("date")).cast(LongType).as("day"))
-      val wv = Window.partitionBy("prio").orderBy(col("price_d"), col("okey"))
-      val wr = Window.partitionBy("prio").orderBy(col("day"))
-        .rangeBetween(-6, 0)
-      o.select(col("prio"), col("okey"),
-          col("price_d").cast(DoubleType).as("price"),
-          rank().over(wv).cast(LongType).as("rnk"),
-          percent_rank().over(wv).as("pr"),
-          cume_dist().over(wv).as("cd"),
-          nth_value(col("okey"), 3).over(wv).as("third_key"),
-          sum(col("price_d")).over(wr).cast(DoubleType).as("rev7"))
-        .orderBy("prio", "rnk")
-    }),
-
-    // Distribution shape per group (operators/Profiling.momentsByGroup):
-    // mean/variance/skewness/excess-kurtosis from exact BIGINT power
-    // sums with a mirrored double tail — the moment profile a curation
-    // pipeline reads before choosing winsorize/z-score bounds. Built-in
-    // skewness()/kurtosis() float moments are merge-order-dependent and
-    // can't hash-gate.
-    "q125_moments" -> ((s, dir) => {
-      graft.operators.Profiling.momentsByGroup(
-        t(s, dir, "lineitem"), Seq("l_returnflag"),
-        col("l_quantity").cast(LongType))
-        .orderBy("l_returnflag")
-    }),
-
-    // SCD type-2 builder (operators/Cdc.scala): each user's event_type
-    // history collapsed into versioned [valid_from, valid_to) intervals,
-    // consecutive restatements opening no version. Per-key windows only;
-    // (ts, event_id) is a total order so same-timestamp events are
-    // stable. Timestamps are floored to MICROSECONDS on both sides —
-    // DuckDB's epoch extraction is µs-granular, and ordering at a finer
-    // grain than the oracle can see would let sub-µs ties resolve
-    // differently per engine.
-    "q124_scd2" -> ((s, dir) => {
-      graft.operators.Cdc.scd2(
-        events(s, dir).withColumn("ts", expr("ts DIV 1000")),
-        "user_id", "event_type", "ts", "event_id")
-        .orderBy("user_id", "version")
-    }),
-
-    // Per-group OLS trend (operators/Regression.scala): quantity drift
-    // over ship date per return flag. Integer sufficient statistics
-    // (x centered to days since 2000-01-01 per the operator's overflow
-    // contract), doubles only in the mirrored final arithmetic.
-    "q118_group_trend" -> ((s, dir) => {
-      graft.operators.Regression.trendByGroup(
-        t(s, dir, "lineitem"), Seq("l_returnflag"),
-        xCol = (unix_date(col("l_shipdate").cast("date")) - 10957L).cast(LongType),
-        yCol = col("l_quantity").cast(LongType))
-        .orderBy("l_returnflag")
-    })
-  )
-
-  /** Sparse shared graph for q105/q106: customer → its top-3 suppliers by
-    * exact DECIMAL revenue, supplier → top-3 parts, part → top-3
-    * customers. Additive offsets keep the three id spaces disjoint, and
-    * the revenue ranks give cycles through all three layers. Group sizes
-    * in the rank windows are bounded by DIMENSION cardinality (the
-    * suppliers/parts/customers a key can pair with), not corpus rows, so
-    * plain windows are safe — TopK.topKPerGroup is the salted form for
-    * corpus-sized groups. Ties break on exact decimals, then the key, so
-    * the edge SET is deterministic and oracle-reproducible.
-    */
-  private def purchaseGraph(s: SparkSession, dir: String): DataFrame = {
-    val j = t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("sp"),
-        col("l_partkey").as("p"),
-        col("l_extendedprice").cast(DecimalType(18, 2)).as("rev"))
-    def top3(a: String, b: String, aOff: Long, bOff: Long): DataFrame = {
-      val w = Window.partitionBy(col(a)).orderBy(desc("rv"), col(b))
-      j.groupBy(col(a), col(b)).agg(sum(col("rev")).as("rv"))
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-        .select((col(a) + lit(aOff)).cast(LongType).as("src"),
-          (col(b) + lit(bOff)).cast(LongType).as("dst"))
-    }
-    top3("c", "sp", 0L, 10000000L)
-      .unionAll(top3("sp", "p", 10000000L, 20000000L))
-      .unionAll(top3("p", "c", 20000000L, 0L))
-  }
-
-  val oracles: Map[String, String] = Map(
-    "q01_fixed_width" ->
-      """WITH lines AS (
-        |  SELECT lpad(CAST(o_orderkey AS VARCHAR), 12, '0')
-        |      || rpad(o_orderpriority, 16, ' ')
-        |      || lpad(CAST(year(o_orderdate) AS VARCHAR), 4, '0') AS line
-        |  FROM orders),
-        |parsed AS (
-        |  SELECT CAST(substring(line, 1, 12) AS BIGINT) AS okey,
-        |         trim(substring(line, 13, 16)) AS priority,
-        |         CAST(substring(line, 29, 4) AS BIGINT) AS yr
-        |  FROM lines)
-        |SELECT priority, yr, CAST(count(*) AS BIGINT) AS cnt,
-        |       min(okey) AS min_key, max(okey) AS max_key
-        |FROM parsed GROUP BY priority, yr ORDER BY priority, yr""".stripMargin,
-
-    "q02_computed_substr" ->
-      """SELECT doc_id,
-        |       substring(text, CAST(doc_id % 7 + 1 AS INT), 12) AS frag,
-        |       CAST(length(substring(text, CAST(doc_id % 7 + 1 AS INT), 12)) AS BIGINT) AS frag_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q03_try_cast" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
-        |       CAST(sum(TRY_CAST(regexp_extract(props, '[0-9]+', 0) AS BIGINT)) AS BIGINT) AS sum_k,
-        |       CAST(sum(CASE WHEN TRY_CAST(event_type AS BIGINT) IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS bad_nulls
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q04_case_buckets" ->
-      """SELECT CASE WHEN l_quantity >= 40 THEN 'high'
-        |            WHEN l_quantity >= 20 THEN 'mid'
-        |            WHEN l_returnflag IN ('A','R') THEN 'returned_low'
-        |            ELSE 'low' END AS bucket,
-        |       l_discount BETWEEN 0.02 AND 0.06 AS mid_discount,
-        |       CAST(count(*) AS BIGINT) AS cnt,
-        |       sum(l_quantity) AS sum_qty,
-        |       CAST(sum(CASE WHEN nullif(l_tax, 0.0) IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS zero_tax_cnt
-        |FROM lineitem GROUP BY 1, 2 ORDER BY bucket, mid_discount""".stripMargin,
-
-    "q05_date_explode" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS y,
-        |       CAST(month(o_orderdate) AS BIGINT) AS m,
-        |       CAST(count(*) AS BIGINT) AS n_slots,
-        |       CAST(count(CAST(try_strptime(
-        |           CAST(year(o_orderdate) AS VARCHAR)
-        |           || lpad(CAST(month(o_orderdate) AS VARCHAR), 2, '0')
-        |           || lpad(CAST(g.day AS VARCHAR), 2, '0'), '%Y%m%d') AS DATE)) AS BIGINT) AS n_valid,
-        |       CAST(sum(CASE WHEN try_strptime(
-        |           CAST(year(o_orderdate) AS VARCHAR)
-        |           || lpad(CAST(month(o_orderdate) AS VARCHAR), 2, '0')
-        |           || lpad(CAST(g.day AS VARCHAR), 2, '0'), '%Y%m%d') IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid
-        |FROM orders CROSS JOIN generate_series(1, 31) AS g(day)
-        |GROUP BY 1, 2 ORDER BY y, m""".stripMargin,
-
-    "q06_pivot_events" ->
-      """SELECT user_id,
-        |       CAST(sum(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT) AS click,
-        |       CAST(sum(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT) AS "view",
-        |       CAST(sum(CASE WHEN event_type = 'signup' THEN 1 END) AS BIGINT) AS signup,
-        |       CAST(sum(CASE WHEN event_type = 'error' THEN 1 END) AS BIGINT) AS error,
-        |       CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS purchase
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q07_agg_wide" ->
+    },
+    oracle =
       s"""SELECT l_returnflag, l_linestatus,
          |       sum(l_quantity) AS sum_qty,
          |       ${oSum("l_extendedprice")} AS sum_price,
@@ -818,17 +236,39 @@ object RelationalQueries {
          |       CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
          |       CAST(sum(CASE WHEN l_quantity > 45 THEN 1 ELSE 0 END) AS BIGINT) AS big_qty_cnt
          |FROM lineitem GROUP BY l_returnflag, l_linestatus
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+         |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
-    "q08_stddev_yearly" ->
+    // A4: sample stddev + countDistinct per group (gold_processor.py:137-164).
+    Query("q08_stddev_yearly", (s, dir) => {
+      t(s, dir, "lineitem")
+        .groupBy(year(col("l_shipdate")).cast(LongType).as("y"))
+        .agg(round(stddev(col("l_extendedprice")), 2).as("std_price"),
+          round(stddev(col("l_quantity")), 4).as("std_qty"),
+          countDistinct(month(col("l_shipdate"))).as("n_months"),
+          count(lit(1)).as("cnt"))
+        .orderBy("y")
+    },
+    oracle =
       """SELECT CAST(year(l_shipdate) AS BIGINT) AS y,
         |       round(stddev_samp(l_extendedprice), 2) AS std_price,
         |       round(stddev_samp(l_quantity), 4) AS std_qty,
         |       CAST(count(DISTINCT month(l_shipdate)) AS BIGINT) AS n_months,
         |       CAST(count(*) AS BIGINT) AS cnt
-        |FROM lineitem GROUP BY 1 ORDER BY y""".stripMargin,
+        |FROM lineitem GROUP BY 1 ORDER BY y""".stripMargin),
 
-    "q09_global_stats" ->
+    // A6/A7: global min/max/avg single-row aggregate
+    // (bronze_processor.py:152-155, silver_processor.py:166-170).
+    Query("q09_global_stats", (s, dir) => {
+      t(s, dir, "orders").agg(
+        to_date(min(col("o_orderdate"))).as("min_date"),
+        to_date(max(col("o_orderdate"))).as("max_date"),
+        min("o_totalprice").as("min_price"),
+        max("o_totalprice").as("max_price"),
+        davg(col("o_totalprice")).as("avg_price"),
+        count(lit(1)).as("cnt"),
+        countDistinct(col("o_custkey")).as("n_cust"))
+    },
+    oracle =
       s"""SELECT CAST(min(o_orderdate) AS DATE) AS min_date,
          |       CAST(max(o_orderdate) AS DATE) AS max_date,
          |       min(o_totalprice) AS min_price,
@@ -836,17 +276,45 @@ object RelationalQueries {
          |       ${oAvg("o_totalprice")} AS avg_price,
          |       CAST(count(*) AS BIGINT) AS cnt,
          |       CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_cust
-         |FROM orders""".stripMargin,
+         |FROM orders""".stripMargin),
 
-    "q10_freq_desc" ->
+    // A9+O2: frequency table with descending count sort
+    // (notebooks/05_data_validation.py:43).
+    Query("q10_freq_desc", (s, dir) => {
+      events(s, dir)
+        .groupBy("event_type").agg(count(lit(1)).as("cnt"))
+        .orderBy(desc("cnt"), col("event_type"))
+    },
+    oracle =
       """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt
-        |FROM events GROUP BY event_type ORDER BY cnt DESC, event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY cnt DESC, event_type""".stripMargin),
 
-    "q11_lineage_pairs" ->
+    // A10: lineage cardinality — distinct (key, date) pair count
+    // (notebooks/05_data_validation.py:179-180).
+    Query("q11_lineage_pairs", (s, dir) => {
+      events(s, dir)
+        .groupBy(col("user_id"), tsDate.as("d"))
+        .agg(count(lit(1)).as("c"))
+        .agg(count(lit(1)).as("pair_cnt"))
+    },
+    oracle =
       """SELECT CAST(count(*) AS BIGINT) AS pair_cnt FROM (
-        |  SELECT user_id, CAST(ts AS DATE) AS d FROM events GROUP BY 1, 2)""".stripMargin,
+        |  SELECT user_id, CAST(ts AS DATE) AS d FROM events GROUP BY 1, 2)""".stripMargin),
 
-    "q12_describe_stats" ->
+    // A11: describe()-shape summary stats (notebooks/05:64,98).
+    Query("q12_describe_stats", (s, dir) => {
+      t(s, dir, "lineitem").agg(
+        count(col("l_quantity")).as("qty_count"),
+        (sum("l_quantity") / count("l_quantity")).as("qty_mean"),
+        round(stddev(col("l_quantity")), 4).as("qty_std"),
+        min("l_quantity").as("qty_min"),
+        max("l_quantity").as("qty_max"),
+        davg(col("l_extendedprice")).as("price_mean"),
+        round(stddev(col("l_extendedprice")), 2).as("price_std"),
+        min("l_extendedprice").as("price_min"),
+        max("l_extendedprice").as("price_max"))
+    },
+    oracle =
       s"""SELECT CAST(count(l_quantity) AS BIGINT) AS qty_count,
          |       sum(l_quantity) / count(l_quantity) AS qty_mean,
          |       round(stddev_samp(l_quantity), 4) AS qty_std,
@@ -856,9 +324,28 @@ object RelationalQueries {
          |       round(stddev_samp(l_extendedprice), 2) AS price_std,
          |       min(l_extendedprice) AS price_min,
          |       max(l_extendedprice) AS price_max
-         |FROM lineitem""".stripMargin,
+         |FROM lineitem""".stripMargin),
 
-    "q13_iqr_outliers" ->
+    // A12: quantile IQR outlier bounds then outlier count
+    // (data_validator.py:99-115; exact percentile so the oracle can match).
+    // Fences are snapped to a 1e-6 grid on BOTH engines before the
+    // comparison: Spark percentile() and DuckDB quantile_cont interpolate
+    // with the same formula but can differ by ~1 ulp, and a data point
+    // lying exactly on an unrounded fence could flip the count.
+    Query("q13_iqr_outliers", (s, dir) => {
+      val li = t(s, dir, "lineitem")
+      val q = li.agg(
+        percentile(col("l_extendedprice"), lit(0.25)).as("q1"),
+        percentile(col("l_extendedprice"), lit(0.75)).as("q3"))
+      val lo = round(col("q1") - (col("q3") - col("q1")) * 1.5, 6)
+      val hi = round(col("q3") + (col("q3") - col("q1")) * 1.5, 6)
+      li.crossJoin(q)
+        .agg(round(first(col("q1")), 2).as("q1_r"),
+          round(first(col("q3")), 2).as("q3_r"),
+          sum(when(col("l_extendedprice") < lo || col("l_extendedprice") > hi,
+            1).otherwise(0)).as("n_outliers"))
+    },
+    oracle =
       """WITH q AS (
         |  SELECT quantile_cont(l_extendedprice, 0.25) AS q1,
         |         quantile_cont(l_extendedprice, 0.75) AS q3
@@ -867,17 +354,38 @@ object RelationalQueries {
         |       CAST(sum(CASE WHEN l_extendedprice < round(q.q1 - (q.q3 - q.q1) * 1.5, 6)
         |                       OR l_extendedprice > round(q.q3 + (q.q3 - q.q1) * 1.5, 6)
         |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM lineitem CROSS JOIN q GROUP BY q.q1, q.q3""".stripMargin,
+        |FROM lineitem CROSS JOIN q GROUP BY q.q1, q.q3""".stripMargin),
 
-    "q14_window_lag" ->
+    // W1: lag over (partition, order) — row semantics (gold_processor.py:185-193).
+    Query("q14_window_lag", (s, dir) => {
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      events(s, dir)
+        .select(col("event_id"), col("user_id"), col("value"),
+          lag(col("value"), 1).over(w).as("prev_value"),
+          (col("value") - lag(col("value"), 1).over(w)).as("delta"))
+        .orderBy("event_id")
+    },
+    oracle =
       """SELECT event_id, user_id, value,
         |       lag(value, 1) OVER w AS prev_value,
         |       value - lag(value, 1) OVER w AS delta
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "q15_window_rolling" ->
+    // W2: rolling 7-ROW frame sum/avg (gold_processor.py:195-199), exact via
+    // decimal window sum / frame row count.
+    Query("q15_window_rolling", (s, dir) => {
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+        .rowsBetween(-6, 0)
+      events(s, dir)
+        .select(col("event_id"),
+          sum(col("value").cast(DecimalType(18, 2))).over(w).cast(DoubleType).as("roll_sum"),
+          (sum(col("value").cast(DecimalType(18, 2))).over(w).cast(DoubleType) /
+            count(lit(1)).over(w)).as("roll_avg"))
+        .orderBy("event_id")
+    },
+    oracle =
       """SELECT event_id,
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS roll_sum,
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE)
@@ -885,55 +393,145 @@ object RelationalQueries {
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
         |             ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "q16_topk_offset" ->
+    // O1/O3/O4: global sort + limit + offset pagination (spark_utils.py:59-84).
+    Query("q16_topk_offset", (s, dir) => {
+      t(s, dir, "lineitem")
+        .orderBy(desc("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
+        .offset(50).limit(100)
+        .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
+    },
+    oracle =
       """SELECT l_orderkey, l_linenumber, l_extendedprice
         |FROM lineitem
         |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
-        |LIMIT 100 OFFSET 50""".stripMargin,
+        |LIMIT 100 OFFSET 50""".stripMargin),
 
-    "q17_union_all" ->
+    // U1: position-based dup-preserving union (bronze_processor.py:35-38).
+    Query("q17_union_all", (s, dir) => {
+      val o = t(s, dir, "orders")
+      val hi = o.filter(col("o_totalprice") > 150000)
+      val urgent = o.filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
+      hi.union(urgent)
+        .groupBy("o_orderstatus")
+        .agg(count(lit(1)).as("cnt"), dsum(col("o_totalprice")).as("sum_price"))
+        .orderBy("o_orderstatus")
+    },
+    oracle =
       s"""WITH u AS (
          |  SELECT * FROM orders WHERE o_totalprice > 150000
          |  UNION ALL
          |  SELECT * FROM orders WHERE o_orderpriority IN ('1-URGENT', '2-HIGH'))
          |SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS cnt,
          |       ${oSum("o_totalprice")} AS sum_price
-         |FROM u GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+         |FROM u GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
-    "q18_except_lineage" ->
+    // U2: set-difference lineage — keys present upstream but not downstream
+    // (notebooks/05_data_validation.py:183-187).
+    // Non-trivial difference: customers who never placed a high-value order.
+    Query("q18_except_lineage", (s, dir) => {
+      t(s, dir, "customer").select(col("c_custkey"))
+        .except(t(s, dir, "orders").filter(col("o_totalprice") > 200000)
+          .select(col("o_custkey").as("c_custkey")))
+        .orderBy("c_custkey")
+    },
+    oracle =
       """SELECT c_custkey FROM customer
         |EXCEPT
         |SELECT o_custkey FROM orders WHERE o_totalprice > 200000
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin),
 
-    "q19_distinct_proj" ->
+    // P13/P14: projection + distinct (bronze_processor.py:151-156).
+    Query("q19_distinct_proj", (s, dir) => {
+      t(s, dir, "lineitem")
+        .select(col("l_returnflag"), col("l_linestatus"),
+          month(col("l_shipdate")).cast(LongType).as("m"))
+        .distinct()
+        .orderBy("l_returnflag", "l_linestatus", "m")
+    },
+    oracle =
       """SELECT DISTINCT l_returnflag, l_linestatus,
         |       CAST(month(l_shipdate) AS BIGINT) AS m
-        |FROM lineitem ORDER BY l_returnflag, l_linestatus, m""".stripMargin,
+        |FROM lineitem ORDER BY l_returnflag, l_linestatus, m""".stripMargin),
 
-    "q20_join_enrich" ->
+    // J1: left equi-join with an explicitly broadcast dimension
+    // (silver_processor.py:116-119).
+    Query("q20_join_enrich", (s, dir) => {
+      t(s, dir, "orders")
+        .join(broadcast(t(s, dir, "customer")),
+          col("o_custkey") === col("c_custkey"), "left")
+        .groupBy(coalesce(col("c_mktsegment"), lit("<none>")).as("segment"))
+        .agg(count(lit(1)).as("n_orders"),
+          dsum(col("o_totalprice")).as("revenue"),
+          davg(col("c_acctbal")).as("avg_acctbal"),
+          countDistinct(col("o_custkey")).as("n_cust"))
+        .orderBy("segment")
+    },
+    oracle =
       s"""SELECT coalesce(c_mktsegment, '<none>') AS segment,
          |       CAST(count(*) AS BIGINT) AS n_orders,
          |       ${oSum("o_totalprice")} AS revenue,
          |       ${oAvg("c_acctbal")} AS avg_acctbal,
          |       CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_cust
          |FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-         |GROUP BY 1 ORDER BY segment""".stripMargin,
+         |GROUP BY 1 ORDER BY segment""".stripMargin),
 
-    "q36_salted_join" ->
+    // Skew-mitigated join: salted equi-join (operators/Skew) — semantics
+    // identical to the plain join, so the oracle is plain SQL; the salt
+    // only changes the physical key distribution.
+    Query("q36_salted_join", (s, dir) => {
+      val right = t(s, dir, "orders")
+        .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
+      graft.operators.Skew.saltedJoin(
+        t(s, dir, "lineitem"), right, Seq("l_orderkey"), saltFactor = 8)
+        .groupBy("o_orderpriority")
+        .agg(count(lit(1)).as("cnt"),
+          sum("l_quantity").as("sum_qty"),
+          dsum(col("l_extendedprice")).as("sum_price"))
+        .orderBy("o_orderpriority")
+    },
+    oracle =
       s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS cnt,
          |       sum(l_quantity) AS sum_qty,
          |       ${oSum("l_extendedprice")} AS sum_price
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
-    "q68_salted_agg" ->
+    // Skew-mitigated aggregation: two-phase salted sum (operators/Skew) —
+    // partials on (key, salt), final on key, so one dominant group's
+    // final reduce spreads across salt buckets. Result is salt-invariant,
+    // so the oracle is the plain GROUP BY; the value goes through
+    // DECIMAL(18,2) on both sides so the two-phase summation order
+    // cannot produce a float drift vs DuckDB's single-phase sum.
+    Query("q68_salted_agg", (s, dir) => {
+      val in = t(s, dir, "lineitem")
+        .select(col("l_returnflag"),
+          col("l_quantity").cast(DecimalType(18, 2)).as("qty"))
+      graft.operators.Skew.saltedSum(in, Seq("l_returnflag"), "qty", saltFactor = 8)
+        .select(col("l_returnflag"),
+          col("sum_qty").cast(DoubleType).as("sum_qty"))
+        .orderBy("l_returnflag")
+    },
+    oracle =
       s"""SELECT l_returnflag, ${oSum("l_quantity")} AS sum_qty
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "q38_sessionize" ->
+    // Sessionization via session_window (the streaming operator, batch
+    // mode): 5-minute inactivity gap over second-truncated event times.
+    // Oracle: the classic gaps-and-islands formulation.
+    Query("q38_sessionize", (s, dir) => {
+      events(s, dir)
+        .select(col("user_id"), col("value"),
+          timestamp_seconds(expr("ts DIV 1000000000")).as("t"))
+        .groupBy(session_window(col("t"), "5 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("session_value"))
+        .select(col("user_id"),
+          unix_timestamp(col("session_window.start")).as("session_start"),
+          col("n_events"), col("session_value"))
+        .orderBy("user_id", "session_start")
+    },
+    oracle =
       s"""WITH ts AS (
          |  SELECT user_id, value,
          |         epoch_ns(ts) // 1000000000 AS t_s
@@ -956,9 +554,25 @@ object RelationalQueries {
          |       CAST(count(*) AS BIGINT) AS n_events,
          |       ${oSum("value")} AS session_value
          |FROM sessions GROUP BY user_id, sid
-         |ORDER BY user_id, session_start""".stripMargin,
+         |ORDER BY user_id, session_start""".stripMargin),
 
-    "q44_asof_join" ->
+    // Backward as-of join (union+window, no inequality join): each event
+    // picks up the latest PRECEDING error of its user — the "state at
+    // event time" lookup. Right side pre-aggregated per (user, second) so
+    // the as-of match is unique.
+    Query("q44_asof_join", (s, dir) => {
+      val ev = events(s, dir).select(col("event_id"), col("user_id"),
+        expr("ts DIV 1000000000").as("t"), col("event_type"), col("value"))
+      val err = ev.filter(col("event_type") === "error")
+        .groupBy("user_id", "t").agg(max("value").as("err_value"))
+        .withColumn("err_t", col("t"))
+      graft.operators.AsofJoin.asofBackward(
+        ev.drop("event_type", "value"), err,
+        Seq("user_id"), "t", Seq("err_t", "err_value"))
+        .select("event_id", "user_id", "t", "err_t", "err_value")
+        .orderBy("event_id")
+    },
+    oracle =
       """WITH ev AS (
         |  SELECT event_id, user_id, epoch_ns(ts) // 1000000000 AS t,
         |         event_type, value
@@ -969,9 +583,25 @@ object RelationalQueries {
         |SELECT e.event_id, e.user_id, e.t, err.t AS err_t, err.err_value
         |FROM ev e ASOF LEFT JOIN err
         |  ON e.user_id = err.user_id AND e.t >= err.t
-        |ORDER BY e.event_id""".stripMargin,
+        |ORDER BY e.event_id""".stripMargin),
 
-    "q45_range_join" ->
+    // Range join via coarse-bucket overlay (equi-join on the bucket, then
+    // exact BETWEEN refine — no BroadcastNestedLoopJoin): lineitems
+    // shipped inside week-long windows anchored at a sparse order subset.
+    Query("q45_range_join", (s, dir) => {
+      val iv = t(s, dir, "orders").filter(pmod(col("o_orderkey"), lit(97)) === 0)
+        .select(col("o_orderkey").as("iv_id"),
+          unix_date(col("o_orderdate").cast("date")).cast("long").as("lo"))
+        .withColumn("hi", col("lo") + 6)
+      val pts = t(s, dir, "lineitem").select(col("l_quantity"),
+        unix_date(col("l_shipdate").cast("date")).cast("long").as("p"))
+      graft.operators.RangeJoin.pointInInterval(pts, iv, "p", "lo", "hi",
+        bucketWidth = 7)
+        .groupBy("iv_id")
+        .agg(count(lit(1)).as("cnt"), sum("l_quantity").as("sum_qty"))
+        .orderBy("iv_id")
+    },
+    oracle =
       """WITH iv AS (
         |  SELECT o_orderkey AS iv_id,
         |         CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS lo,
@@ -984,34 +614,86 @@ object RelationalQueries {
         |SELECT iv_id, CAST(count(*) AS BIGINT) AS cnt,
         |       sum(l_quantity) AS sum_qty
         |FROM iv JOIN pts ON p BETWEEN lo AND hi
-        |GROUP BY iv_id ORDER BY iv_id""".stripMargin,
+        |GROUP BY iv_id ORDER BY iv_id""".stripMargin),
 
-    "q21_anomaly_join" ->
+    // J2: join back to an aggregate of the same input (anomaly vs normals,
+    // gold_processor.py:211-225).
+    Query("q21_anomaly_join", (s, dir) => {
+      val o = t(s, dir, "orders")
+      val normals = o.groupBy("o_custkey")
+        .agg(davg(col("o_totalprice")).as("cust_avg"))
+      o.join(normals, Seq("o_custkey"), "left")
+        .select(col("o_orderkey"), col("o_custkey"),
+          (col("o_totalprice") - col("cust_avg")).as("anomaly"))
+        .orderBy("o_orderkey")
+    },
+    oracle =
       s"""SELECT o_orderkey, o_custkey,
          |       o_totalprice - n.cust_avg AS anomaly
          |FROM orders
          |LEFT JOIN (SELECT o_custkey, ${oAvg("o_totalprice")} AS cust_avg
          |           FROM orders GROUP BY o_custkey) n USING (o_custkey)
-         |ORDER BY o_orderkey""".stripMargin,
+         |ORDER BY o_orderkey""".stripMargin),
 
-    "q56_upsert_latest" ->
+    // Changelog compaction: latest event per (user, type) via ONE hash
+    // aggregate (max over a (version, payload) struct) — the upsert/merge
+    // primitive, with no per-key sort window anywhere.
+    Query("q56_upsert_latest", (s, dir) => {
+      // µs-truncated version: DuckDB's parquet reader truncates
+      // TIMESTAMP_NS to µs, so compare (and order) at µs precision.
+      graft.operators.Merge.latestByKey(
+        events(s, dir).select(col("user_id"), col("event_type"),
+          expr("ts DIV 1000").as("ts_us"), col("event_id"), col("value")),
+        keys = Seq("user_id", "event_type"), versionCols = Seq("ts_us", "event_id"))
+        .orderBy("user_id", "event_type")
+    },
+    oracle =
       """SELECT user_id, event_type, epoch_ns(ts) // 1000 AS ts_us,
         |       event_id, value
         |FROM events
         |QUALIFY row_number() OVER (PARTITION BY user_id, event_type
         |  ORDER BY epoch_ns(ts) // 1000 DESC, event_id DESC) = 1
-        |ORDER BY user_id, event_type""".stripMargin,
+        |ORDER BY user_id, event_type""".stripMargin),
 
+    // Bloom-pruned join: lineitem rows are filtered by a broadcast Bloom
+    // filter of the urgent-order keys BEFORE the join shuffle; false
+    // positives die in the join, so the result equals the plain join.
+    Query("q57_bloom_semijoin", (s, dir) => {
+      val urgent = t(s, dir, "orders")
+        .filter(col("o_orderpriority") === "1-URGENT")
+        .select("o_orderkey")
+      graft.operators.BloomPrune.bloomPrunedJoin(
+        t(s, dir, "lineitem"), "l_orderkey", urgent, "o_orderkey",
+        expectedItems = 20000L)
+        .groupBy("l_returnflag")
+        .agg(count(lit(1)).as("cnt"), sum("l_quantity").as("sum_qty"),
+          dsum(col("l_extendedprice")).as("sum_price"))
+        .orderBy("l_returnflag")
+    },
     // The bloom prune is physical-only: the oracle is the PLAIN join.
-    "q57_bloom_semijoin" ->
+    oracle =
       s"""SELECT l_returnflag, CAST(count(*) AS BIGINT) AS cnt,
          |       sum(l_quantity) AS sum_qty,
          |       ${oSum("l_extendedprice")} AS sum_price
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          |WHERE o_orderpriority = '1-URGENT'
-         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "q58_snapshot_diff" ->
+    // Snapshot diff (CDC shape): two deterministic order-table versions —
+    // keys % 4 = 0 only in the new snapshot, % 4 = 1 only in the old,
+    // % 3 = 0 repriced — full-outer join, unchanged keys dropped.
+    Query("q58_snapshot_diff", (s, dir) => {
+      val orders = t(s, dir, "orders").select("o_orderkey", "o_totalprice")
+      val oldSnap = orders.filter(pmod(col("o_orderkey"), lit(4)) =!= 0)
+      val newSnap = orders.filter(pmod(col("o_orderkey"), lit(4)) =!= 1)
+        .withColumn("o_totalprice",
+          when(pmod(col("o_orderkey"), lit(3)) === 0, col("o_totalprice") + 10.0)
+            .otherwise(col("o_totalprice")))
+      graft.operators.Cdc.snapshotDiff(oldSnap, newSnap,
+        Seq("o_orderkey"), Seq("o_totalprice"))
+        .orderBy("o_orderkey")
+    },
+    oracle =
       """WITH snap_a AS (
         |  SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 4 <> 0),
         |snap_b AS (
@@ -1030,9 +712,21 @@ object RelationalQueries {
         |         b.o_totalprice AS new_o_totalprice
         |  FROM snap_a a FULL OUTER JOIN snap_b b ON a.o_orderkey = b.o_orderkey)
         |SELECT * FROM d WHERE change <> 'unchanged'
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
-    "q61_group_zscore" ->
+    // Per-group z-score normalization via aggregate-then-join (NO window
+    // over the group): moments are exact integer-valued sums, so the
+    // scores are bit-reproducible against the SQL oracle.
+    Query("q61_group_zscore", (s, dir) => {
+      graft.operators.Normalize.zscoreByGroup(
+        t(s, dir, "lineitem")
+          .select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity"),
+        Seq("l_returnflag"), "l_quantity")
+        .select(col("l_orderkey"), col("l_linenumber").cast(LongType).as("l_linenumber"),
+          col("l_returnflag"), col("z"))
+        .orderBy("l_orderkey", "l_linenumber")
+    },
+    oracle =
       """WITH st AS (
         |  SELECT l_returnflag, sum(l_quantity) AS s,
         |         sum(l_quantity * l_quantity) AS ss,
@@ -1043,23 +737,40 @@ object RelationalQueries {
         |       CASE WHEN n > 1 THEN (l_quantity - s / n)
         |              / sqrt((ss - s * s / n) / (n - 1)) END AS z
         |FROM lineitem l JOIN st ON l.l_returnflag = st.l_returnflag
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
-    "q66_zorder" -> {
-      // The same bit-interleave Layout.zValue(16, x, y) emits: bit b of x
-      // at output bit 2b, bit b of y at 2b+1.
-      val z = (0 until 16).flatMap { b =>
-        Seq(s"(((CAST(l_partkey AS BIGINT) >> $b) & 1) << ${2 * b})",
-          s"(((CAST(l_suppkey AS BIGINT) >> $b) & 1) << ${2 * b + 1})")
-      }.mkString(" | ")
-      s"""SELECT l_partkey, l_suppkey, ($z) AS z
-         |FROM lineitem
-         |ORDER BY z, l_partkey, l_suppkey LIMIT 200""".stripMargin
+    // Z-order curve values (multi-dimensional data-layout clustering):
+    // pure bit-interleave arithmetic, reproduced literally in the oracle.
+    // Z-order EFFECTIVENESS, measured: the same 100-partkey range
+    // predicate pruned against zone maps of two layouts of the SAME
+    // rows — arrival order vs Z-order on (l_partkey, l_suppkey). The
+    // skip-ratio delta is the number q66's layout exists for.
+    Query("q226_zorder_benefit", (s, dir) => {
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
+        col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
+      def layout(name: String, keyed: org.apache.spark.sql.DataFrame,
+                 bucket: Column, order: Seq[Column]) = {
+        val sharded = graft.operators.GlobalIds.shardByOrder(
+          keyed, bucket, order, shardSize = 1000)
+        val stats = graft.operators.Profiling.shardStats(sharded,
+          col("shard"), col("l_partkey"))
+        graft.operators.Profiling.pruneSimulation(stats, lit(100), lit(199))
+          .select(lit(name).as("layout"), col("n_shards"), col("n_pruned"),
+            col("n_scanned"), col("rows_skipped"), col("rows_total"),
+            col("skip_ratio"))
+      }
+      layout("arrival", li, expr("l_orderkey DIV 4096"),
+        Seq(col("l_orderkey"), col("l_linenumber")))
+        .unionByName(layout("zorder",
+          li.withColumn("__zv", graft.operators.Layout.zValue(12,
+            col("l_partkey"), col("l_suppkey"))),
+          expr("__zv DIV 4096"),
+          Seq(col("__zv"), col("l_orderkey"), col("l_linenumber"))))
+        .orderBy("layout")
     },
-
     // Two rankings of the same rows → 1000-row shards → zone-map stats
     // on l_partkey → the q155 prune rule for BETWEEN 100 AND 199.
-    "q226_zorder_benefit" -> {
+    oracle = {
       val z = (0 until 12).flatMap { b =>
         Seq(s"(((CAST(l_partkey AS BIGINT) >> $b) & 1) << ${2 * b})",
           s"(((CAST(l_suppkey AS BIGINT) >> $b) & 1) << ${2 * b + 1})")
@@ -1100,16 +811,99 @@ object RelationalQueries {
          |UNION ALL
          |${side("zorder", zorder)}
          |) ORDER BY layout""".stripMargin
+    }),
+
+    Query("q66_zorder", (s, dir) => {
+      t(s, dir, "lineitem")
+        .select(col("l_partkey"), col("l_suppkey"),
+          graft.operators.Layout.zValue(16, col("l_partkey"), col("l_suppkey")).as("z"))
+        .orderBy("z", "l_partkey", "l_suppkey")
+        .limit(200)
     },
+    oracle = {
+      // The same bit-interleave Layout.zValue(16, x, y) emits: bit b of x
+      // at output bit 2b, bit b of y at 2b+1.
+      val z = (0 until 16).flatMap { b =>
+        Seq(s"(((CAST(l_partkey AS BIGINT) >> $b) & 1) << ${2 * b})",
+          s"(((CAST(l_suppkey AS BIGINT) >> $b) & 1) << ${2 * b + 1})")
+      }.mkString(" | ")
+      s"""SELECT l_partkey, l_suppkey, ($z) AS z
+         |FROM lineitem
+         |ORDER BY z, l_partkey, l_suppkey LIMIT 200""".stripMargin
+    }),
 
-    "q105_pagerank" -> oPagerank(iters = 8),
+    // Fixed-point PageRank (operators/PageRank.scala) over the sparse
+    // derived purchase graph ([[purchaseGraph]]). All rank arithmetic is
+    // BIGINT in 1e-12 units, so the 8-round power iteration is
+    // bit-identical under any partitioning — which is what lets a
+    // parallel graph algorithm hash-match a sequential SQL engine.
+    Query("q105_pagerank", (s, dir) => {
+      graft.operators.PageRank.pageRank(purchaseGraph(s, dir), "src", "dst",
+        iterations = 8)
+        .orderBy("node")
+    },
+    oracle = oPagerank(iters = 8)),
 
-    "q108_kcore" -> oKcore(k = 4, rounds = 8),
-    "q132_label_prop" -> oLabelProp(rounds = 4),
+    // Degree-ordered triangle counting + local clustering coefficient
+    // (operators/Triangles.scala) over the same purchase graph, read as
+    // undirected: a tripartite triangle is a closed c→s→p→c affinity
+    // loop (the customer's top supplier stocks a part whose top buyers
+    // include that customer). Exact integer counts; the coefficient is a
+    // small-integer ratio, so the double division is bit-portable.
+    Query("q106_triangles", (s, dir) => {
+      graft.operators.Triangles.triangleCounts(purchaseGraph(s, dir),
+        "src", "dst")
+        .orderBy("node")
+    },
+    oracle =
+      s"""WITH $oPurchaseEdges,
+         |${oTriangleCtes("e")}
+         |SELECT node, degree, triangles, wedges, clustering
+         |FROM tstats ORDER BY node""".stripMargin),
 
+    // 4-core of the purchase graph (operators/KCore.scala). Every node
+    // has out-degree 3 by construction, so k=4 is the first level where
+    // peeling bites: only nodes that are also POPULAR (chosen by others'
+    // top-3 lists) survive, and their tendrils cascade away — measured
+    // fixpoint depth 3 at sf0.01, well inside the 8-round contract the
+    // oracle unrolls (extra rounds are no-ops; peeling is idempotent).
+    Query("q108_kcore", (s, dir) => {
+      graft.operators.KCore.kCore(purchaseGraph(s, dir), "src", "dst",
+        k = 4, rounds = 8)
+        .orderBy("node")
+    },
+    oracle = oKcore(k = 4, rounds = 8)),
+
+    // Synchronous label-propagation communities (operators/LabelProp
+    // .scala) over the same purchase graph: 4 rounds of neighbor-label
+    // mode with min-label ties — dense affinity neighborhoods, where
+    // connected components (q47's machinery) would lump everything
+    // reachable into one piece. Exact integer votes; the fixed-round
+    // synchronous contract is what the oracle unrolls literally.
+    Query("q132_label_prop", (s, dir) => {
+      graft.operators.LabelProp.labelPropagation(purchaseGraph(s, dir),
+        "src", "dst", rounds = 4)
+        .orderBy("node")
+    },
+    oracle = oLabelProp(rounds = 4)),
+
+    // Modularity of q132's communities: per-community exact-BIGINT
+    // numerators 4m·e_c − d_c² over the shared 4m² denominator (Q = Σ
+    // num / 4m²) — the "did LPA find real structure" read, cells
+    // returned, statistic = their sum (the chi-squared discipline).
+    Query("q207_modularity", (s, dir) => {
+      // cache the derived edge table: LPA checkpoints its own copy, but
+      // modularity's degree/intra-edge passes would otherwise recompute
+      // the purchase-graph joins+windows from scratch
+      val g = graft.operators.CacheScope.track(purchaseGraph(s, dir))
+      val labs = graft.operators.LabelProp.labelPropagation(g, "src", "dst",
+        rounds = 4)
+      graft.operators.LabelProp.modularity(g, "src", "dst", labs)
+        .orderBy("label")
+    },
     // q132's chain, then degree sums and intra-community edge counts per
     // final label; zero-internal-edge communities coalesce to 0.
-    "q207_modularity" ->
+    oracle =
       (oLabelPropChain(rounds = 4) +
         s"""
            |, deg AS (
@@ -1133,40 +927,50 @@ object RelationalQueries {
            |       CAST(4 * mm.m * coalesce(ei.e_in, 0) - ds.d_sum * ds.d_sum
            |         AS DOUBLE) / CAST(4 * mm.m * mm.m AS DOUBLE) AS q_contrib
            |FROM ds LEFT JOIN ei USING (label) CROSS JOIN mm
-           |ORDER BY ds.label""".stripMargin),
+           |ORDER BY ds.label""".stripMargin)),
 
-    "q109_funnel" ->
+    // Ordered funnel view → click → purchase within 24h of the first
+    // view (operators/EventAnalytics.scala): per-stage reach counts and
+    // average lag. Lags are floored to whole SECONDS per user before
+    // summing — the ns sums would pass 2^53 and double-round differently
+    // per engine; second-sums stay exact integers.
+    Query("q109_funnel", (s, dir) => {
+      graft.operators.EventAnalytics.funnel(events(s, dir), "user_id", "ts",
+        "event_type", Seq("view", "click", "purchase"),
+        windowNs = 86400000000000L)
+        .withColumn("lag_s", expr("(ts - t1) DIV 1000000000"))
+        .groupBy("stage_idx", "stage")
+        .agg(count(lit(1)).as("users"),
+          (sum(col("lag_s")).cast(DoubleType) / count(lit(1))).as("avg_lag_s"))
+        .orderBy("stage_idx")
+    },
+    oracle =
       // One CTE per stage, each the same "earliest valid event after the
       // previous reach, within the window of t1" min-aggregate the
       // operator runs; lags floor to whole seconds before summing so the
       // averages divide identical exact integers.
-      """WITH ev AS (SELECT user_id, epoch_ns(ts) AS ns, event_type FROM events),
-        |s1 AS MATERIALIZED (
-        |  SELECT user_id, min(ns) AS t1 FROM ev
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS MATERIALIZED (
-        |  SELECT e.user_id, s1.t1, min(e.ns) AS t2
-        |  FROM ev e JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'click' AND e.ns > s1.t1
-        |    AND e.ns <= s1.t1 + 86400000000000
-        |  GROUP BY 1, 2),
-        |s3 AS MATERIALIZED (
-        |  SELECT e.user_id, s2.t1, min(e.ns) AS t3
-        |  FROM ev e JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ns > s2.t2
-        |    AND e.ns <= s2.t1 + 86400000000000
-        |  GROUP BY 1, 2),
-        |st AS (
-        |  SELECT 1 AS stage_idx, 'view' AS stage, t1 AS ts, t1 FROM s1
-        |  UNION ALL SELECT 2, 'click', t2, t1 FROM s2
-        |  UNION ALL SELECT 3, 'purchase', t3, t1 FROM s3)
-        |SELECT CAST(stage_idx AS BIGINT) AS stage_idx, stage,
-        |       CAST(count(*) AS BIGINT) AS users,
-        |       CAST(CAST(sum((ts - t1) // 1000000000) AS BIGINT) AS DOUBLE)
-        |         / count(*) AS avg_lag_s
-        |FROM st GROUP BY 1, 2 ORDER BY stage_idx""".stripMargin,
+      s"""WITH ev AS (SELECT user_id, epoch_ns(ts) AS ns, event_type FROM events),
+         |$oFunnelStageCtes,
+         |st AS (
+         |  SELECT 1 AS stage_idx, 'view' AS stage, t1 AS ts, t1 FROM s1
+         |  UNION ALL SELECT 2, 'click', t2, t1 FROM s2
+         |  UNION ALL SELECT 3, 'purchase', t3, t1 FROM s3)
+         |SELECT CAST(stage_idx AS BIGINT) AS stage_idx, stage,
+         |       CAST(count(*) AS BIGINT) AS users,
+         |       CAST(CAST(sum((ts - t1) // 1000000000) AS BIGINT) AS DOUBLE)
+         |         / count(*) AS avg_lag_s
+         |FROM st GROUP BY 1, 2 ORDER BY stage_idx""".stripMargin),
 
-    "q110_retention" ->
+    // Weekly cohort retention (operators/EventAnalytics.scala): users
+    // cohorted by first-activity epoch-day, activity bucketed into
+    // 7-day offsets — all integer DIV arithmetic on epoch days, time
+    // zone independent by construction.
+    Query("q110_retention", (s, dir) => {
+      graft.operators.EventAnalytics.retentionCohorts(events(s, dir),
+        "user_id", "ts", bucketDays = 7)
+        .orderBy("cohort", "offset")
+    },
+    oracle =
       """WITH ev AS (
         |  SELECT user_id,
         |         date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
@@ -1178,17 +982,41 @@ object RelationalQueries {
         |         (ev.day - f.d0) // 7 AS "offset"
         |  FROM ev JOIN f ON ev.user_id = f.user_id)
         |SELECT cohort, "offset", CAST(count(*) AS BIGINT) AS users
-        |FROM a GROUP BY 1, 2 ORDER BY cohort, "offset"""".stripMargin,
+        |FROM a GROUP BY 1, 2 ORDER BY cohort, "offset"""".stripMargin),
 
-    "q106_triangles" ->
-      s"""WITH $oPurchaseEdges,
-         |${oTriangleCtes("e")}
-         |SELECT node, degree, triangles, wedges, clustering
-         |FROM tstats ORDER BY node""".stripMargin,
-
+    // INTERSECT + semi/anti joins — the set-op family's missing gates
+    // next to q17 (UNION ALL) and q18 (EXCEPT). Per nation: customers
+    // whose key set has BOTH urgent and finished orders (INTERSECT
+    // feeding a LEFT SEMI join) vs customers with NEITHER (LEFT ANTI
+    // against the distinct union). The key sets are order-key
+    // projections — orders of magnitude under the customer table — so
+    // both probes broadcast.
+    Query("q121_set_membership", (s, dir) => {
+      val ords = t(s, dir, "orders")
+      val urgent = ords.filter(col("o_orderpriority") === "1-URGENT")
+        .select("o_custkey")
+      val fstat = ords.filter(col("o_orderstatus") === "F")
+        .select("o_custkey")
+      val both = urgent.intersect(fstat)
+      val either = urgent.union(fstat).distinct()
+      val cust = t(s, dir, "customer")
+      val nBoth = cust
+        .join(broadcast(both), col("c_custkey") === col("o_custkey"), "left_semi")
+        .groupBy(col("c_nationkey").cast(LongType).as("nation"))
+        .agg(count(lit(1)).as("n_both"))
+      val nNeither = cust
+        .join(broadcast(either), col("c_custkey") === col("o_custkey"), "left_anti")
+        .groupBy(col("c_nationkey").cast(LongType).as("nation"))
+        .agg(count(lit(1)).as("n_neither"))
+      nBoth.join(nNeither, Seq("nation"), "full_outer")
+        .select(col("nation"),
+          coalesce(col("n_both"), lit(0L)).as("n_both"),
+          coalesce(col("n_neither"), lit(0L)).as("n_neither"))
+        .orderBy("nation")
+    },
     // INTERSECT for the both-set, UNION (distinct) for the either-set,
     // IN / NOT IN as the semi/anti twins.
-    "q121_set_membership" ->
+    oracle =
       """WITH urgent AS (
         |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'),
         |fstat AS (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'),
@@ -1208,21 +1036,99 @@ object RelationalQueries {
         |       coalesce(n_both, 0) AS n_both,
         |       coalesce(n_neither, 0) AS n_neither
         |FROM nb FULL JOIN nn ON nb.nation = nn.nation
-        |ORDER BY nation""".stripMargin,
+        |ORDER BY nation""".stripMargin),
 
-    "q120_unpivot" ->
+    // Unpivot/melt — the inverse of q06's pivot: four measure columns to
+    // (measure, val) rows via Spark's native unpivot (an Expand; the 4x
+    // fanout IS the operator's semantics, unlike the grouping-sets case
+    // where the cascade avoids it). Values pass through untouched, so
+    // doubles are bit-stable.
+    Query("q120_unpivot", (s, dir) => {
+      t(s, dir, "lineitem")
+        .filter(pmod(col("l_orderkey"), lit(500)) === 0)
+        .select(col("l_orderkey").as("okey"),
+          col("l_linenumber").cast(LongType).as("line"),
+          col("l_quantity").as("quantity"),
+          col("l_extendedprice").as("extendedprice"),
+          col("l_discount").as("discount"),
+          col("l_tax").as("tax"))
+        .unpivot(Array(col("okey"), col("line")),
+          Array(col("quantity"), col("extendedprice"), col("discount"), col("tax")),
+          "measure", "val")
+        .orderBy("okey", "line", "measure")
+    },
+    oracle =
       """SELECT okey, line, measure, val FROM (
         |  SELECT l_orderkey AS okey, CAST(l_linenumber AS BIGINT) AS line,
         |         l_quantity AS quantity, l_extendedprice AS extendedprice,
         |         l_discount AS discount, l_tax AS tax
         |  FROM lineitem WHERE l_orderkey % 500 = 0)
         |UNPIVOT (val FOR measure IN (quantity, extendedprice, discount, tax))
-        |ORDER BY okey, line, measure""".stripMargin,
+        |ORDER BY okey, line, measure""".stripMargin),
 
+    // Distribution-window showcase: rank / percent_rank / cume_dist /
+    // nth_value over one total order, plus a 7-DAY RANGE-frame running
+    // revenue (the ROWS-frame q15's calendar sibling — a range frame
+    // covers gaps and same-day ties by VALUE, which row frames cannot).
+    // Money sums go through DECIMAL(18,2) per the object-doc discipline;
+    // percent_rank/cume_dist are single exact divisions of rank counts.
+    // Both windows share the partition key, so one shuffle feeds both
+    // sorts.
+    Query("q119_window_suite", (s, dir) => {
+      val o = t(s, dir, "orders")
+        .filter(pmod(col("o_orderkey"), lit(20)) === 0)
+        .select(col("o_orderpriority").as("prio"),
+          col("o_orderkey").as("okey"),
+          col("o_totalprice").cast(DecimalType(18, 2)).as("price_d"),
+          unix_date(col("o_orderdate").cast("date")).cast(LongType).as("day"))
+      val wv = Window.partitionBy("prio").orderBy(col("price_d"), col("okey"))
+      val wr = Window.partitionBy("prio").orderBy(col("day"))
+        .rangeBetween(-6, 0)
+      o.select(col("prio"), col("okey"),
+          col("price_d").cast(DoubleType).as("price"),
+          rank().over(wv).cast(LongType).as("rnk"),
+          percent_rank().over(wv).as("pr"),
+          cume_dist().over(wv).as("cd"),
+          nth_value(col("okey"), 3).over(wv).as("third_key"),
+          sum(col("price_d")).over(wr).cast(DoubleType).as("rev7"))
+        .orderBy("prio", "rnk")
+    },
+    // Same named window for the distribution functions (default
+    // cumulative frame; the unique (price_d, okey) order makes RANGE vs
+    // ROWS moot), RANGE 6 PRECEDING on epoch-day for the revenue frame.
+    oracle =
+      """WITH o AS (
+        |  SELECT o_orderpriority AS prio, o_orderkey AS okey,
+        |         CAST(o_totalprice AS DECIMAL(18,2)) AS price_d,
+        |         date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day
+        |  FROM orders WHERE o_orderkey % 20 = 0)
+        |SELECT prio, okey, CAST(price_d AS DOUBLE) AS price,
+        |       CAST(rank() OVER wv AS BIGINT) AS rnk,
+        |       percent_rank() OVER wv AS pr,
+        |       cume_dist() OVER wv AS cd,
+        |       nth_value(okey, 3) OVER wv AS third_key,
+        |       CAST(sum(price_d) OVER (PARTITION BY prio ORDER BY day
+        |         RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) AS rev7
+        |FROM o
+        |WINDOW wv AS (PARTITION BY prio ORDER BY price_d, okey)
+        |ORDER BY prio, rnk""".stripMargin),
+
+    // Distribution shape per group (operators/Profiling.momentsByGroup):
+    // mean/variance/skewness/excess-kurtosis from exact BIGINT power
+    // sums with a mirrored double tail — the moment profile a curation
+    // pipeline reads before choosing winsorize/z-score bounds. Built-in
+    // skewness()/kurtosis() float moments are merge-order-dependent and
+    // can't hash-gate.
+    Query("q125_moments", (s, dir) => {
+      graft.operators.Profiling.momentsByGroup(
+        t(s, dir, "lineitem"), Seq("l_returnflag"),
+        col("l_quantity").cast(LongType))
+        .orderBy("l_returnflag")
+    },
     // Exact integer power sums; the double tail mirrors momentsByGroup
     // token-for-token (left-assoc +/-, left-assoc products, sqrt never
     // pow — pow's libm varies across engines, sqrt is IEEE-exact).
-    "q125_moments" ->
+    oracle =
       """WITH b AS (
         |  SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS y FROM lineitem),
         |s AS (
@@ -1248,9 +1154,23 @@ object RelationalQueries {
         |SELECT l_returnflag, n, mean, m2 AS variance,
         |       CASE WHEN m2 != 0.0 THEN m3 / (m2 * sqrt(m2)) END AS skewness,
         |       CASE WHEN m2 != 0.0 THEN m4 / (m2 * m2) - 3.0 END AS kurtosis
-        |FROM m ORDER BY l_returnflag""".stripMargin,
+        |FROM m ORDER BY l_returnflag""".stripMargin),
 
-    "q124_scd2" ->
+    // SCD type-2 builder (operators/Cdc.scala): each user's event_type
+    // history collapsed into versioned [valid_from, valid_to) intervals,
+    // consecutive restatements opening no version. Per-key windows only;
+    // (ts, event_id) is a total order so same-timestamp events are
+    // stable. Timestamps are floored to MICROSECONDS on both sides —
+    // DuckDB's epoch extraction is µs-granular, and ordering at a finer
+    // grain than the oracle can see would let sub-µs ties resolve
+    // differently per engine.
+    Query("q124_scd2", (s, dir) => {
+      graft.operators.Cdc.scd2(
+        events(s, dir).withColumn("ts", expr("ts DIV 1000")),
+        "user_id", "event_type", "ts", "event_id")
+        .orderBy("user_id", "version")
+    },
+    oracle =
       """WITH ev AS (
         |  SELECT user_id, event_type, epoch_ns(ts) // 1000 AS ts, event_id
         |  FROM events),
@@ -1266,32 +1186,23 @@ object RelationalQueries {
         |       CAST(lead(ts) OVER w IS NULL AS BIGINT) AS is_current
         |FROM chg
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY user_id, version""".stripMargin,
+        |ORDER BY user_id, version""".stripMargin),
 
-    // Same named window for the distribution functions (default
-    // cumulative frame; the unique (price_d, okey) order makes RANGE vs
-    // ROWS moot), RANGE 6 PRECEDING on epoch-day for the revenue frame.
-    "q119_window_suite" ->
-      """WITH o AS (
-        |  SELECT o_orderpriority AS prio, o_orderkey AS okey,
-        |         CAST(o_totalprice AS DECIMAL(18,2)) AS price_d,
-        |         date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day
-        |  FROM orders WHERE o_orderkey % 20 = 0)
-        |SELECT prio, okey, CAST(price_d AS DOUBLE) AS price,
-        |       CAST(rank() OVER wv AS BIGINT) AS rnk,
-        |       percent_rank() OVER wv AS pr,
-        |       cume_dist() OVER wv AS cd,
-        |       nth_value(okey, 3) OVER wv AS third_key,
-        |       CAST(sum(price_d) OVER (PARTITION BY prio ORDER BY day
-        |         RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) AS rev7
-        |FROM o
-        |WINDOW wv AS (PARTITION BY prio ORDER BY price_d, okey)
-        |ORDER BY prio, rnk""".stripMargin,
-
+    // Per-group OLS trend (operators/Regression.scala): quantity drift
+    // over ship date per return flag. Integer sufficient statistics
+    // (x centered to days since 2000-01-01 per the operator's overflow
+    // contract), doubles only in the mirrored final arithmetic.
+    Query("q118_group_trend", (s, dir) => {
+      graft.operators.Regression.trendByGroup(
+        t(s, dir, "lineitem"), Seq("l_returnflag"),
+        xCol = (unix_date(col("l_shipdate").cast("date")) - 10957L).cast(LongType),
+        yCol = col("l_quantity").cast(LongType))
+        .orderBy("l_returnflag")
+    },
     // Same integer sufficient statistics, same fixed double tail as
     // Regression.trendByGroup — never regr_slope/corr, whose float
     // accumulation is merge-order-dependent.
-    "q118_group_trend" ->
+    oracle =
       """WITH b AS (
         |  SELECT l_returnflag,
         |         date_diff('day', DATE '2000-01-01', CAST(l_shipdate AS DATE)) AS x,
@@ -1318,8 +1229,36 @@ object RelationalQueries {
         |             CAST(n * sxy - sx * sy AS DOUBLE)) /
         |            (CAST(n * sxx - sx * sx AS DOUBLE) *
         |             CAST(n * syy - sy * sy AS DOUBLE)) END AS r2
-        |FROM s ORDER BY l_returnflag""".stripMargin
+        |FROM s ORDER BY l_returnflag""".stripMargin),
   )
+
+  /** Sparse shared graph for q105/q106: customer → its top-3 suppliers by
+    * exact DECIMAL revenue, supplier → top-3 parts, part → top-3
+    * customers. Additive offsets keep the three id spaces disjoint, and
+    * the revenue ranks give cycles through all three layers. Group sizes
+    * in the rank windows are bounded by DIMENSION cardinality (the
+    * suppliers/parts/customers a key can pair with), not corpus rows, so
+    * plain windows are safe — TopK.topKPerGroup is the salted form for
+    * corpus-sized groups. Ties break on exact decimals, then the key, so
+    * the edge SET is deterministic and oracle-reproducible.
+    */
+  private def purchaseGraph(s: SparkSession, dir: String): DataFrame = {
+    val j = t(s, dir, "lineitem")
+      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").as("c"), col("l_suppkey").as("sp"),
+        col("l_partkey").as("p"),
+        col("l_extendedprice").cast(DecimalType(18, 2)).as("rev"))
+    def top3(a: String, b: String, aOff: Long, bOff: Long): DataFrame = {
+      val w = Window.partitionBy(col(a)).orderBy(desc("rv"), col(b))
+      j.groupBy(col(a), col(b)).agg(sum(col("rev")).as("rv"))
+        .withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
+        .select((col(a) + lit(aOff)).cast(LongType).as("src"),
+          (col(b) + lit(bOff)).cast(LongType).as("dst"))
+    }
+    top3("c", "sp", 0L, 10000000L)
+      .unionAll(top3("sp", "p", 10000000L, 20000000L))
+      .unionAll(top3("p", "c", 20000000L, 0L))
+  }
 
   /** Triangle-count oracle CTE chain over an edge relation exposing
     * `src`/`dst` — mirrors operators/Triangles.scala step-for-step:
@@ -1327,7 +1266,7 @@ object RelationalQueries {
     * wedges at the low corner, closure by the oriented (b, c) edge.
     * All-integer counts; the coefficient is a small-int double ratio.
     * Ends with `tstats(node, degree, triangles, wedges, clustering)`;
-    * the caller writes the final SELECT. Shared with LlmQueries' q107.
+    * the caller writes the final SELECT. Shared with CorpusQueries' q107.
     */
   private[queries] def oTriangleCtes(rel: String): String =
     s"""und AS MATERIALIZED (

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.GhcnPipeline
+import graft.core.{GhcnConfig, StoragePaths}
 import java.nio.file.Files
 
 /** Like-for-like local measure for the reference's ONLY wall-clock
@@ -10,18 +12,20 @@ import java.nio.file.Files
   * The NOAA tarball is unavailable offline, so this generates a
   * synthetic 913-file .dly fixture at MATCHED shape (913 files, 2015–
   * 2025 months, 5 elements, all 31 slots populated) and row count
-  * (~4.48M post-explode), then times the engine's own bronze build —
-  * ONE multi-path text scan (etl/Bronze.scala:37-48), the same parse/
-  * explode/cull semantics, partitioned parquet write like the
-  * reference's bronze table. Hardware differs from the blessed run
+  * (~4.48M post-explode), then times the engine's own bronze build,
+  * `GhcnPipeline.runBronze` — ONE multi-path text scan
+  * (etl/Bronze.scala:37-48), the same parse/explode/cull semantics, and
+  * TableIO's rebalanced partitioned write, like the reference's bronze
+  * table. Hardware differs from the blessed run
   * (unspecified Databricks cluster vs local[n]); the number exists so
   * BASELINE.md has a defensible non-zero denominator for the
   * "matches-or-beats single-node throughput" gate, not as a cluster
   * claim.
   *
-  * Round 11 extends the measurement through SILVER (clean → pivot →
-  * station-enrich → quality score, partitioned write) and GOLD (the 4
-  * serving tables off a cached silver) on the same fixture, with a
+  * Round 11 extends the measurement through SILVER (`runSilver`: clean →
+  * pivot → station-enrich → quality score, partitioned write) and GOLD
+  * (`runGold`: the 4 serving tables off a cached silver) on the same
+  * fixture, with a
   * matched-shape stations file for the enrichment join. The reference
   * logs publish NO runtime marker for notebooks 03/04 (grep "runtime"
   * over notebooks/logs/ hits only 02.output:45), so the silver/gold
@@ -39,6 +43,11 @@ object BronzeBaseline {
     val spark = LocalSession()
 
     val base = Files.createTempDirectory("graft_bronze_baseline_")
+    val pipeline = new GhcnPipeline(spark, GhcnConfig(storage = StoragePaths(
+      basePath = base.toString,
+      bronzePath = base.resolve("bronze").toString,
+      silverPath = base.resolve("silver").toString,
+      goldPath = base.resolve("gold").toString)))
     val dlyDir = base.resolve("dly")
     Files.createDirectories(dlyDir)
 
@@ -76,14 +85,11 @@ object BronzeBaseline {
       try s.iterator().asScala.map(_.toString).toSeq
       finally s.close()
     }
-    val outDir = base.resolve("bronze").toString
 
     val t1 = System.nanoTime()
-    val bronze = graft.etl.Bronze.readDly(spark, pathSeq,
-      startYear = Some(2015), endYear = Some(2025))
-    bronze.write.mode("overwrite").partitionBy("year", "month").parquet(outDir)
+    val bronze = pipeline.runBronze(pathSeq)
     val buildSec = (System.nanoTime() - t1) / 1e9
-    val rows = spark.read.parquet(outDir).count()
+    val rows = bronze.count()
 
     // matched-shape ghcnd-stations.txt: one fixed-width line per station
     // id, fields at the slices Silver.parseStations reads (lat 13..20,
@@ -105,31 +111,15 @@ object BronzeBaseline {
     }
     Files.writeString(stFile, stSb.toString)
 
-    val silverDir = base.resolve("silver").toString
     val t2 = System.nanoTime()
-    val silver = graft.etl.Silver.silver(
-      spark.read.parquet(outDir),
-      spark.read.text(stFile.toString))
-    silver.write.mode("overwrite").partitionBy("year", "month")
-      .parquet(silverDir)
+    val silver = pipeline.runSilver(stFile.toString)
     val silverSec = (System.nanoTime() - t2) / 1e9
-    val silverRows = spark.read.parquet(silverDir).count()
+    val silverRows = silver.count()
 
-    val goldDir = base.resolve("gold")
     val t3 = System.nanoTime()
-    val silverIn = spark.read.parquet(silverDir).cache()
-    val goldTables = Map(
-      "monthly_climate" -> graft.etl.Gold.monthlyClimate(silverIn),
-      "yearly_climate" -> graft.etl.Gold.yearlyClimate(silverIn),
-      "climate_summaries" -> graft.etl.Gold.climateSummaries(silverIn),
-      "ml_features" -> graft.etl.Gold.mlFeatures(silverIn))
-    goldTables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(goldDir.resolve(name).toString)
-    }
-    silverIn.unpersist()
+    val gold = pipeline.runGold()
     val goldSec = (System.nanoTime() - t3) / 1e9
-    val goldRows = goldTables.keys.map(n =>
-      spark.read.parquet(goldDir.resolve(n).toString).count()).sum
+    val goldRows = gold.values.map(_.count()).sum
 
     println(s"""{"metric":"bronze_build","files":913,"lines":$totalLines,""" +
       s""""rows":$rows,"gen_sec":${math.round(genSec * 100) / 100.0},""" +

@@ -20,7 +20,7 @@ class AudioDedupPayloadSpec extends SparkSpec {
     val ids = (0L until 900L) ++ Seq(4999L, 12345L, 99991L, 1234567L)
     val got = ids.toDF("doc_id")
       .select(col("doc_id"),
-        graft.queries.LlmQueries.audioDedupPayload(col("doc_id")).as("e"))
+        graft.queries.MediaDedupQueries.audioDedupPayload(col("doc_id")).as("e"))
       .collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("e")).toMap
     ids.foreach { id =>

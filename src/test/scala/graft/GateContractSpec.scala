@@ -82,6 +82,22 @@ class GateContractSpec extends SparkSpec {
     val stale = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"queries with no oracle: ${missing.toSeq.sorted.mkString(", ")}")
     assert(stale.isEmpty, s"oracles with no query: ${stale.toSeq.sorted.mkString(", ")}")
+    // SparkEntry's maps are built from the registry with toMap, which
+    // keeps the LAST entry of a repeated name and silently drops the
+    // other query and its oracle: a repeated name must fail here.
+    import graft.queries.{Query, QueryRegistry}
+    def duplicates(entries: Seq[Query]): Seq[String] =
+      entries.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+        .toSeq.sorted
+    val dups = duplicates(QueryRegistry.all)
+    assert(dups.isEmpty, s"query names registered twice: ${dups.mkString(", ")}")
+    assert(SparkEntry.queries.size == QueryRegistry.all.size)
+    // saboteur: a second tier file reusing a name is caught
+    val first = QueryRegistry.all.head
+    val sabotaged = QueryRegistry.all :+ first.copy(oracle = "SELECT 1")
+    assert(duplicates(sabotaged) == Seq(first.name))
+    assert(sabotaged.map(q => q.name -> q.oracle).toMap.size == QueryRegistry.all.size,
+      "toMap should hide the duplicate - the reason this check exists")
   }
 
   test("every oracle fits the driver budget per the committed ORACLE_BUDGET.json") {

@@ -243,7 +243,7 @@ class StreamingSpec extends SparkSpec {
     // q38_sessionize (whose gaps-and-islands oracle is hash-checked by
     // the driver) — including the exact-300s boundary merge behavior.
     val dir = "/root/testdata/sf0.001"
-    val q38 = graft.queries.RelationalQueries.queries("q38_sessionize")(spark, dir)
+    val q38 = SparkEntry.queries("q38_sessionize")(spark, dir)
       .collect()
     val ev = graft.io.TableIO.eventsNanos(spark, dir)
       .select(col("user_id"), col("value"),
