@@ -1,14 +1,11 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Kernel behind [[ChrfGramOverlaps]]: every chrF per-order component
+/** Kernel behind [[graft.functions.chrfGramOverlaps]]: every chrF per-order component
   * for one (candidate, reference) pair of WHITESPACE-STRIPPED strings,
   * in one compiled pass — for k = 1..maxOrder, the gram counts
   * (numChars − k + 1, floored at 0) and the clipped multiset overlap
@@ -16,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Semantics replicate the HOF composition it replaces
   * (`sort_array(charShingles(s, k))` pairs through
-  * [[MultisetIntersectSortedString]] — the executable spec
+  * [[MultisetClipKernel.intersectSorted]] — the executable spec
   * [[graft.operators.GenerationEval.chrFRow]] still computes and the
   * suite pins against): grams are CODE-POINT substrings, duplicates
   * count, and orders where BOTH sides have zero grams emit no entry
@@ -45,6 +42,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * applicability.
   */
 object ChrfKernel {
+
+  /** Result type of [[overlaps]]. */
+  val Schema: ArrayType = ArrayType(StructType(Seq(
+    StructField("k", LongType, nullable = false),
+    StructField("n_cand_grams", LongType, nullable = false),
+    StructField("n_ref_grams", LongType, nullable = false),
+    StructField("overlap", LongType, nullable = false))),
+    containsNull = false)
 
   def overlaps(cand: UTF8String, ref: UTF8String, maxOrder: Int): GenericArrayData = {
     val cb = cand.getBytes
@@ -319,47 +324,4 @@ object ChrfKernel {
     java.util.Arrays.sort(arr.asInstanceOf[Array[Object]])
     arr
   }
-}
-
-/** All chrF per-order gram components of a (candidate, reference) pair
-  * as ONE codegen'd call returning
-  * ARRAY<STRUCT<k, n_cand_grams, n_ref_grams, overlap>> over the
-  * EFFECTIVE orders only. Inputs must already be whitespace-stripped
-  * (the operator's regexp_replace does that once per side). NULL
-  * input → NULL (callers coalesce upstream).
-  */
-case class ChrfGramOverlaps(left: Expression, right: Expression,
-                            maxOrder: Int)
-    extends BinaryExpression {
-
-  require(maxOrder >= 1 && maxOrder <= 8, "need 1 <= maxOrder <= 8")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"ChrfGramOverlaps expects (STRING, STRING), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("k", LongType, nullable = false),
-    StructField("n_cand_grams", LongType, nullable = false),
-    StructField("n_ref_grams", LongType, nullable = false),
-    StructField("overlap", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(leftValue: Any, rightValue: Any): Any =
-    ChrfKernel.overlaps(leftValue.asInstanceOf[UTF8String],
-      rightValue.asInstanceOf[UTF8String], maxOrder)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expressions.ChrfKernel.overlaps($a, $b, $maxOrder);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

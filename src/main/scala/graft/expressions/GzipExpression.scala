@@ -1,11 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
-
 /** GZIP member decode (RFC 1952) of a BINARY column — the decompression
   * step in front of every compressed ingest format (.warc.gz crawl
   * shards, .tar.gz / WebDataset shards, .jsonl.gz dumps). The deflate
@@ -102,46 +96,4 @@ object GzipKernel {
     }
     out.toByteArray
   }
-}
-
-/** `gzip_decode(content BINARY)` → BINARY — the decompressed
-  * (multi-member-concatenated) payload, NULL on corrupt framing, a
-  * failed CRC-32/ISIZE, or output beyond the 64 MiB cap. Chains with
-  * the other byte kernels: `tar_members(gzip_decode(content))` reads a
-  * .tar.gz WebDataset shard.
-  */
-case class GzipDecode(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"GzipDecode expects BINARY, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = BinaryType
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else GzipKernel.decode(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |byte[] ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  ${ev.value} = graft.expressions.GzipKernel.decode(${cEv.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

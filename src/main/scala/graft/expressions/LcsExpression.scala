@@ -1,10 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Single-pass LCS kernel (object methods compile to static forwarders,
   * so generated code calls it directly — the [[NgramHash]] discipline).
@@ -40,47 +36,4 @@ object LcsKernel {
     }
     prev(m).toLong
   }
-}
-
-/** Native token-LCS length of two ARRAY<STRING> columns — the kernel of
-  * ROUGE-L ([[graft.operators.GenerationEval.rougeL]]). A higher-order-
-  * function spelling of the O(n·m) DP would nest two interpreted folds
-  * per row and fall out of whole-stage codegen; this expression emits
-  * one static call to [[LcsKernel.lcs]] (primitive two-row DP), keeping
-  * the generation-eval scan a pure codegen'd projection.
-  *
-  * Semantics: exact token equality, NULL elements match nothing,
-  * mismatched lengths are fine (LCS is defined for any pair); a NULL
-  * array yields NULL.
-  */
-case class LcsTokenLength(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"LcsTokenLength expects two ARRAY<STRING> inputs, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(leftValue: Any, rightValue: Any): Any =
-    LcsKernel.lcs(leftValue.asInstanceOf[ArrayData],
-      rightValue.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expressions.LcsKernel.lcs($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,9 +1,6 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -40,6 +37,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * reading, so adversarial truncation cannot over-read.
   */
 object MediaHeaderKernel {
+
+  /** Result type of [[parse]]. */
+  val Schema: StructType = StructType(Seq(
+    StructField("format", StringType, nullable = false),
+    StructField("width", LongType, nullable = false),
+    StructField("height", LongType, nullable = false),
+    StructField("bit_depth", LongType, nullable = false),
+    StructField("orientation", LongType, nullable = false)))
 
   private val FORMAT_PNG = UTF8String.fromString("png")
   private val FORMAT_GIF = UTF8String.fromString("gif")
@@ -341,6 +346,13 @@ object MediaHeaderKernel {
   */
 object AudioHeaderKernel {
 
+  /** Result type of [[parse]]. */
+  val Schema: StructType = StructType(Seq(
+    StructField("format", StringType, nullable = false),
+    StructField("sample_rate", LongType, nullable = false),
+    StructField("channels", LongType, nullable = false),
+    StructField("bits", LongType, nullable = false)))
+
   private val FORMAT_WAV = UTF8String.fromString("wav")
   private val FORMAT_FLAC = UTF8String.fromString("flac")
 
@@ -409,97 +421,4 @@ object AudioHeaderKernel {
     if (rate == 0L) return null
     InternalRow(FORMAT_FLAC, rate, ch, bits)
   }
-}
-
-/** `media_header(content BINARY)` →
-  * STRUCT<format STRING, width BIGINT, height BIGINT, bit_depth BIGINT,
-  * orientation BIGINT>, NULL on corrupt/truncated/unknown payloads.
-  * Orientation (round 14) is EXIF/TIFF tag 274 — from TIFF IFD0 and
-  * JPEG APP1 Exif; 1 (upright) for orientation-free containers. One
-  * codegen'd kernel call per row; payload bytes never leave the
-  * executor.
-  */
-case class MediaHeader(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"MediaHeader expects BINARY, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false),
-    StructField("bit_depth", LongType, nullable = false),
-    StructField("orientation", LongType, nullable = false)))
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else MediaHeaderKernel.parse(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |InternalRow ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  ${ev.value} = graft.expressions.MediaHeaderKernel.parse(${cEv.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `audio_header(content BINARY)` →
-  * STRUCT<format STRING, sample_rate BIGINT, channels BIGINT,
-  * bits BIGINT>, NULL on corrupt/truncated/unknown payloads.
-  */
-case class AudioHeader(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"AudioHeader expects BINARY, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("sample_rate", LongType, nullable = false),
-    StructField("channels", LongType, nullable = false),
-    StructField("bits", LongType, nullable = false)))
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else AudioHeaderKernel.parse(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |InternalRow ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  ${ev.value} = graft.expressions.AudioHeaderKernel.parse(${cEv.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,11 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
-
 /** Image METADATA STRIP — the privacy pass a multimodal training
   * pipeline runs before anything is stored or trained on: camera EXIF
   * blocks carry GPS coordinates, serial numbers, and timestamps, and
@@ -105,45 +99,4 @@ object MediaStripKernel {
     }
     null // no IEND
   }
-}
-
-/** `media_strip(content BINARY)` → BINARY — the payload with privacy
-  * metadata removed (JPEG APP1–APP15 + COM; PNG
-  * tEXt/zTXt/iTXt/eXIf/tIME), pixels byte-identical. NULL on
-  * non-JPEG/PNG or malformed payloads.
-  */
-case class MediaStrip(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"MediaStrip expects BINARY, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = BinaryType
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else MediaStripKernel.strip(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |byte[] ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  ${ev.value} = graft.expressions.MediaStripKernel.strip(${cEv.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

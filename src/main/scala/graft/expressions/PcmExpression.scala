@@ -1,9 +1,6 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -52,6 +49,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * rather than scanning unbounded memory.
   */
 object PcmKernel {
+
+  /** Result type of [[parse]]. */
+  val Schema: StructType = StructType(
+    StructField("codec", StringType, nullable = false) +: Seq(
+      "sample_rate", "channels", "bits", "n_samples", "duration_ms",
+      "sum_q", "sq_sum", "n_clipped", "lead_silence", "trail_silence")
+      .map(StructField(_, LongType, nullable = false)))
 
   private val MaxDataBytes = 1L << 26
   private val SilenceThreshold = 256
@@ -478,95 +482,4 @@ object PcmKernel {
     }
     java.lang.Long.valueOf(h)
   }
-}
-
-/** `pcm_stats(content BINARY)` →
-  * STRUCT<codec STRING, sample_rate, channels, bits, n_samples,
-  * duration_ms, sum_q, sq_sum, n_clipped, lead_silence, trail_silence
-  * — BIGINT>, NULL on corrupt / truncated / unsupported-layout
-  * payloads (supported: pcm16, G.711 ulaw/alaw). One codegen'd kernel
-  * call per row; sample bytes never leave the executor.
-  */
-case class PcmStats(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"PcmStats expects BINARY, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = StructType(
-    StructField("codec", StringType, nullable = false) +: Seq(
-      "sample_rate", "channels", "bits", "n_samples", "duration_ms",
-      "sum_q", "sq_sum", "n_clipped", "lead_silence", "trail_silence")
-      .map(StructField(_, LongType, nullable = false)))
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else PcmKernel.parse(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |InternalRow ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  ${ev.value} = graft.expressions.PcmKernel.parse(${cEv.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `audio_hash(content BINARY)` → BIGINT — the 64-bit energy-envelope
-  * sign hash of [[PcmKernel.envelopeHash]], NULL on corrupt /
-  * unsupported / shorter-than-65-sample payloads. Feed the column to
-  * [[graft.operators.Dedup.signaturePairs64]] (or the incremental
-  * matcher) — the same banded machinery images use.
-  */
-case class AudioEnvelopeHash(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"AudioEnvelopeHash expects BINARY, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else PcmKernel.envelopeHash(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    val boxed = ctx.freshName("hash")
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |long ${ev.value} = 0L;
-        |if (!${cEv.isNull}) {
-        |  java.lang.Long $boxed =
-        |    graft.expressions.PcmKernel.envelopeHash(${cEv.value});
-        |  if ($boxed != null) { ${ev.isNull} = false; ${ev.value} = $boxed.longValue(); }
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,10 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -67,8 +64,20 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object PixelKernel {
 
-  /** Decoded pixel statistics — consumed by the [[PixelStats]]
-    * expression and by [[graft.operators.Multimodal]]'s mapPartitions
+  /** Result type of [[parse]]. */
+  val Schema: StructType = StructType(Seq(
+    StructField("format", StringType, nullable = false),
+    StructField("width", LongType, nullable = false),
+    StructField("height", LongType, nullable = false),
+    StructField("channels", LongType, nullable = false),
+    StructField("n_pixels", LongType, nullable = false),
+    StructField("lum_sum", LongType, nullable = false),
+    StructField("lum_sq_sum", LongType, nullable = false),
+    StructField("dhash", LongType, nullable = true),
+    StructField("lum_hist", ArrayType(LongType, containsNull = false), nullable = false)))
+
+  /** Decoded pixel statistics — consumed by [[parse]] and by
+    * [[graft.operators.Multimodal]]'s mapPartitions
     * feature pass.
     */
   final case class Stats(format: String, width: Int, height: Int,
@@ -156,7 +165,13 @@ object PixelKernel {
     else resizeGrid(v.width, v.height, tw, th, v.lum)
   }
 
-  /** [[decode]] shaped as the expression's InternalRow. */
+  /** [[resizeBox]] as an ARRAY<BIGINT> column value. */
+  def resize(b: Array[Byte], tw: Int, th: Int): ArrayData = {
+    val g = resizeBox(b, tw, th)
+    if (g == null) null else new GenericArrayData(g)
+  }
+
+  /** [[decode]] shaped as a [[Schema]] row. */
   def parse(b: Array[Byte]): InternalRow = {
     val s = decode(b)
     if (s == null) null
@@ -682,114 +697,4 @@ object PixelKernel {
     }
     Stats(fmt, w, h, channels, s, sq, dh, hist)
   }
-}
-
-/** `pixel_stats(content BINARY)` →
-  * STRUCT<format STRING, width BIGINT, height BIGINT, channels BIGINT,
-  * n_pixels BIGINT, lum_sum BIGINT, lum_sq_sum BIGINT,
-  * dhash BIGINT (NULL when the 9×8 grid is undefined),
-  * lum_hist ARRAY<BIGINT> (8 buckets)>,
-  * NULL on corrupt / truncated / unsupported payloads. One codegen'd
-  * kernel call per row; payload bytes never leave the executor.
-  */
-case class PixelStats(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"PixelStats expects BINARY, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false),
-    StructField("channels", LongType, nullable = false),
-    StructField("n_pixels", LongType, nullable = false),
-    StructField("lum_sum", LongType, nullable = false),
-    StructField("lum_sq_sum", LongType, nullable = false),
-    StructField("dhash", LongType, nullable = true),
-    StructField("lum_hist", ArrayType(LongType, containsNull = false),
-      nullable = false)))
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else PixelKernel.parse(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |InternalRow ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  ${ev.value} = graft.expressions.PixelKernel.parse(${cEv.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `pixel_resize(content BINARY, tw, th)` → ARRAY<BIGINT> of tw·th
-  * box-filter-averaged milli-luminance cells (row-major), NULL on
-  * corrupt / unsupported payloads or an upscale request. tw/th are
-  * foldable plan constants. The real downscale kernel a multimodal
-  * pipeline runs to normalize resolutions before embedding — one
-  * codegen'd call per row, payload bytes never leave the executor.
-  */
-case class PixelResize(child: Expression, tw: Int, th: Int)
-  extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (tw < 1 || th < 1)
-      TypeCheckResult.TypeCheckFailure("target dims must be positive")
-    else child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"PixelResize expects BINARY, got ${t.simpleString}")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else {
-      val g = PixelKernel.resizeBox(v.asInstanceOf[Array[Byte]], tw, th)
-      if (g == null) null else new GenericArrayData(g)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    val grid = ctx.freshName("grid")
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  long[] $grid = graft.expressions.PixelKernel.resizeBox(
-        |    ${cEv.value}, $tw, $th);
-        |  if ($grid != null) {
-        |    ${ev.value} =
-        |      new org.apache.spark.sql.catalyst.util.GenericArrayData($grid);
-        |    ${ev.isNull} = false;
-        |  }
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,9 +1,6 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -38,6 +35,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * adversarial header loops.
   */
 object TarKernel {
+
+  /** Result type of [[parse]]. */
+  val Schema: ArrayType = ArrayType(StructType(Seq(
+    StructField("name", StringType, nullable = false),
+    StructField("offset", LongType, nullable = false),
+    StructField("size", LongType, nullable = false))),
+    containsNull = false)
 
   private val MaxMembers = 1 << 20
 
@@ -116,50 +120,4 @@ object TarKernel {
     }
     if (seen) v else -1L
   }
-}
-
-/** `tar_members(content BINARY)` →
-  * ARRAY<STRUCT<name STRING, offset BIGINT, size BIGINT>> of the
-  * archive's regular-file members (offset = first data byte, so
-  * `substring(content, offset + 1, size)` slices the payload), NULL on
-  * corrupt / truncated / non-tar payloads.
-  */
-case class TarMembers(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"TarMembers expects BINARY, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("offset", LongType, nullable = false),
-    StructField("size", LongType, nullable = false))),
-    containsNull = false)
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else TarKernel.parse(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  ${ev.value} = graft.expressions.TarKernel.parse(${cEv.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

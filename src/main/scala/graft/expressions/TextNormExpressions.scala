@@ -1,13 +1,9 @@
 package graft.expressions
 
 import java.text.Normalizer
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Kernel behind [[NfcNormalizeNative]]: Unicode canonical composition
+/** Kernel behind [[graft.functions.nfc]]: Unicode canonical composition
   * (NFC) via the JDK's Normalizer. The `isNormalized` fast path matters
   * at corpus scale — real text is overwhelmingly already NFC (all-ASCII
   * trivially so), and the check is a scan with no allocation, so the
@@ -25,33 +21,4 @@ object NfcKernel {
     if (Normalizer.isNormalized(s, Normalizer.Form.NFC)) text
     else UTF8String.fromString(Normalizer.normalize(s, Normalizer.Form.NFC))
   }
-}
-
-/** Unicode NFC normalization of a string column in one compiled pass —
-  * the canonical-composition step every dedup/fingerprint pipeline needs
-  * BEFORE hashing: "é" as U+00E9 and as "e"+U+0301 are the same text to
-  * a reader but different bytes to every hash in this library, so
-  * un-normalized corpora silently under-dedup. Spark has no built-in
-  * normalizer; this is the (b)-tier custom scalar expression from the
-  * build plan (codegen'd, null-intolerant, STRING→STRING).
-  */
-case class NfcNormalizeNative(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"NfcNormalizeNative expects a STRING input, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = StringType
-
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    NfcKernel.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.NfcKernel.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

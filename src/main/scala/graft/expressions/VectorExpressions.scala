@@ -773,54 +773,7 @@ case class IntersectCountSortedLong(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** MULTISET intersection size of two SORTED string arrays via the same
-  * codegen'd two-pointer merge — duplicates are NOT collapsed, so the
-  * result is exactly Σ_g min(count_a(g), count_b(g)): the clipped-
-  * overlap numerator of ROUGE-N/chrF, computed row-locally. Feeding
-  * `sort_array(grams)` pairs through this kernel turns a whole
-  * gram-overlap eval into ONE codegen'd projection — no explode, no
-  * (pair, gram)-keyed hash aggregate, no shuffle (the [[graft
-  * .functions.lcsTokenLength]] ROUGE-L discipline; measured 66.5 MB →
-  * 0 shuffle and ~10× wall-clock on the chrF gates at sf0.1).
-  *
-  * Comparison is UTF8String's binary order — the SAME order
-  * `sort_array` sorts by, so any two arrays sorted by Spark walk
-  * correctly. Unlike [[IntersectCountSortedLong]] (distinct-set
-  * semantics for Jaccard), this kernel counts duplicate matches.
-  */
-case class MultisetIntersectSortedString(left: Expression,
-                                         right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"MultisetIntersectSortedString expects two ARRAY<STRING> inputs, " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(leftValue: Any, rightValue: Any): Any =
-    MultisetClipKernel.intersectSorted(leftValue.asInstanceOf[ArrayData],
-      rightValue.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expressions.MultisetClipKernel.intersectSorted($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Kernel behind [[MultisetClipMaxRef]]: the multi-reference clipped
+/** Kernel behind [[graft.functions.multisetClipMaxRef]]: the multi-reference clipped
   * gram overlap Σ_g min(count_cand(g), max_r count_ref_r(g)) over one
   * SORTED candidate array and an array of SORTED reference arrays — the
   * BLEU per-order numerator (Papineni 2002 §2.1) computed row-locally.
@@ -878,7 +831,7 @@ object MultisetClipKernel {
   }
 
   /** Two-pointer multiset intersection of two SORTED string arrays —
-    * the [[MultisetIntersectSortedString]] kernel body, shared by its
+    * the [[graft.functions.multisetIntersectSorted]] kernel body, shared by its
     * interpreted and generated paths; NULL elements match nothing.
     */
   def intersectSorted(a: ArrayData, b: ArrayData): Long = {
@@ -899,54 +852,6 @@ object MultisetClipKernel {
     }
     cnt
   }
-}
-
-/** Multi-reference clipped gram overlap of a SORTED ARRAY<STRING>
-  * candidate against an ARRAY<ARRAY<STRING>> of SORTED references —
-  * Σ_g min(count_cand(g), max over refs of count_ref(g)), the BLEU
-  * clipping rule as ONE codegen'd static call. With references
-  * collected per candidate (bounded by the eval protocol, typically
-  * ≤ 4 — the MBR k-bound discipline), this turns the whole BLEU
-  * per-order numerator into a row-local projection: no gram explode,
-  * no (pair, order, gram, ref) aggregate, no gram shuffle (the
-  * [[MultisetIntersectSortedString]] chrF discipline extended to the
-  * max-over-refs clip that a two-array intersect can't express —
-  * Σ_g min(cc, max_r rc_r) ≠ max_r Σ_g min(cc, rc_r)).
-  *
-  * NULL inner reference arrays are skipped (contribute no credit);
-  * a NULL top-level input yields NULL. Comparison is UTF8String's
-  * binary order — the same order `sort_array` produces.
-  */
-case class MultisetClipMaxRef(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _),
-            ArrayType(ArrayType(StringType, _), _)) => true
-      case _ => false
-    }
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"MultisetClipMaxRef expects (ARRAY<STRING>, ARRAY<ARRAY<STRING>>), " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(leftValue: Any, rightValue: Any): Any =
-    MultisetClipKernel.clipMaxRef(leftValue.asInstanceOf[ArrayData],
-      rightValue.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expressions.MultisetClipKernel.clipMaxRef($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Kernel behind [[NearestCentroidCell]]: argmax-cosine over a centroid

@@ -1,9 +1,6 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -45,6 +42,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * overflow an Int index (the round-14 RIFF walk lesson).
   */
 object VideoHeaderKernel {
+
+  /** Result type of [[parse]]. */
+  val Schema: StructType = StructType(Seq(
+    StructField("format", StringType, nullable = false),
+    StructField("width", LongType, nullable = false),
+    StructField("height", LongType, nullable = false),
+    StructField("duration_ms", LongType, nullable = false),
+    StructField("n_frames", LongType, nullable = false),
+    StructField("codec", StringType, nullable = false)))
 
   private val FORMAT_MP4 = UTF8String.fromString("mp4")
   private val FORMAT_AVI = UTF8String.fromString("avi")
@@ -397,6 +403,14 @@ object VideoHeaderKernel {
   */
 object VideoFrameKernel {
 
+  /** Result type of [[parse]]. */
+  val Schema: ArrayType = ArrayType(StructType(Seq(
+    StructField("frame_idx", LongType, nullable = false),
+    StructField("lum_sum", LongType, nullable = false),
+    StructField("lum_sq_sum", LongType, nullable = false),
+    StructField("dhash", LongType, nullable = true))),
+    containsNull = false)
+
   private val MaxFrameBytes = 1L << 26
 
   private def le16(b: Array[Byte], i: Int): Long =
@@ -417,7 +431,7 @@ object VideoFrameKernel {
   /** biCompression fourcc 'MJPG' as the LE32 the strf stores. */
   private val FourccMjpg = 0x47504A4DL
 
-  /** Scala-side decode (shared by the expression and
+  /** Scala-side decode (shared by [[parse]] and
     * [[graft.operators.Multimodal]]): None on corrupt AVIs or frame
     * layouts with no available decode path (the two supported layouts
     * are uncompressed 24bpp BI_RGB DIB, and — round 17 — MJPEG, whose
@@ -535,7 +549,7 @@ object VideoFrameKernel {
     Some(out.toSeq)
   }
 
-  /** [[decode]] shaped as the expression's ArrayData of InternalRows. */
+  /** [[decode]] shaped as a [[Schema]] array. */
   def parse(b: Array[Byte], stride: Int): ArrayData = decode(b, stride) match {
     case None => null
     case Some(frames) => new GenericArrayData(frames.map(f =>
@@ -571,6 +585,14 @@ object VideoFrameKernel {
   * be consistent across frames (a mid-stream rate flip is corrupt).
   */
 object Mp3HeaderKernel {
+
+  /** Result type of [[parse]]. */
+  val Schema: StructType = StructType(Seq(
+    StructField("sample_rate", LongType, nullable = false),
+    StructField("channels", LongType, nullable = false),
+    StructField("n_frames", LongType, nullable = false),
+    StructField("duration_ms", LongType, nullable = false),
+    StructField("bitrate_kbps", LongType, nullable = false)))
 
   // MPEG-1 Layer III / MPEG-2(.5) Layer III bitrates, kbps, index 1..14
   private val BitrateV1 = Array(0, 32, 40, 48, 56, 64, 80, 96, 112,
@@ -633,151 +655,4 @@ object Mp3HeaderKernel {
     InternalRow(rate.toLong, channels, frames,
       samples * 1000L / rate, kbpsSum / frames)
   }
-}
-
-/** `video_header(content BINARY)` →
-  * STRUCT<format STRING, width BIGINT, height BIGINT,
-  * duration_ms BIGINT, n_frames BIGINT, codec STRING>, NULL on
-  * corrupt / truncated / unknown payloads. One codegen'd kernel call
-  * per row; payload bytes never leave the executor.
-  */
-case class VideoHeader(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"VideoHeader expects BINARY, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false),
-    StructField("duration_ms", LongType, nullable = false),
-    StructField("n_frames", LongType, nullable = false),
-    StructField("codec", StringType, nullable = false)))
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else VideoHeaderKernel.parse(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |InternalRow ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  ${ev.value} = graft.expressions.VideoHeaderKernel.parse(${cEv.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `video_frame_stats(content BINARY, stride)` →
-  * ARRAY<STRUCT<frame_idx BIGINT, lum_sum BIGINT, lum_sq_sum BIGINT,
-  * dhash BIGINT>> over every stride-th uncompressed-DIB AVI frame,
-  * NULL on corrupt / compressed / non-AVI payloads. The stride is a
-  * foldable literal (a plan constant, like the n of the n-gram
-  * expressions).
-  */
-case class VideoFrameStats(child: Expression, stride: Int)
-  extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (stride <= 0)
-      TypeCheckResult.TypeCheckFailure("stride must be positive")
-    else child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"VideoFrameStats expects BINARY, got ${t.simpleString}")
-    }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("frame_idx", LongType, nullable = false),
-    StructField("lum_sum", LongType, nullable = false),
-    StructField("lum_sq_sum", LongType, nullable = false),
-    StructField("dhash", LongType, nullable = true))),
-    containsNull = false)
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else VideoFrameKernel.parse(v.asInstanceOf[Array[Byte]], stride)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  ${ev.value} = graft.expressions.VideoFrameKernel.parse(
-        |    ${cEv.value}, $stride);
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `mp3_header(content BINARY)` →
-  * STRUCT<sample_rate BIGINT, channels BIGINT, n_frames BIGINT,
-  * duration_ms BIGINT, bitrate_kbps BIGINT>, NULL on corrupt /
-  * truncated / non-Layer-III payloads.
-  */
-case class Mp3Header(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"Mp3Header expects BINARY, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("sample_rate", LongType, nullable = false),
-    StructField("channels", LongType, nullable = false),
-    StructField("n_frames", LongType, nullable = false),
-    StructField("duration_ms", LongType, nullable = false),
-    StructField("bitrate_kbps", LongType, nullable = false)))
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else Mp3HeaderKernel.parse(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |InternalRow ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  ${ev.value} = graft.expressions.Mp3HeaderKernel.parse(${cEv.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

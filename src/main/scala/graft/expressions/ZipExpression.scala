@@ -1,9 +1,6 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,6 +26,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * NULL; entry count capped at 2^20.
   */
 object ZipKernel {
+
+  /** Result type of [[parse]]. */
+  val Schema: ArrayType = ArrayType(StructType(Seq(
+    StructField("name", StringType, nullable = false),
+    StructField("method", LongType, nullable = false),
+    StructField("offset", LongType, nullable = false),
+    StructField("csize", LongType, nullable = false),
+    StructField("usize", LongType, nullable = false))),
+    containsNull = false)
 
   private val MaxMembers = 1 << 20
 
@@ -131,100 +137,4 @@ object InflateRawKernel {
       case _: java.util.zip.DataFormatException => null
     } finally inf.end()
   }
-}
-
-/** `zip_members(content BINARY)` →
-  * ARRAY<STRUCT<name STRING, method BIGINT, offset BIGINT,
-  * csize BIGINT, usize BIGINT>> of the archive's regular members
-  * (offset = first byte of the member's compressed data), NULL on
-  * corrupt / truncated / non-zip payloads.
-  */
-case class ZipMembers(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ZipMembers expects BINARY, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("method", LongType, nullable = false),
-    StructField("offset", LongType, nullable = false),
-    StructField("csize", LongType, nullable = false),
-    StructField("usize", LongType, nullable = false))),
-    containsNull = false)
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else ZipKernel.parse(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  ${ev.value} = graft.expressions.ZipKernel.parse(${cEv.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `inflate_raw(data BINARY, usize BIGINT)` → BINARY — RFC 1951 raw
-  * deflate decode to exactly `usize` bytes, NULL on corrupt streams,
-  * size mismatches, or the 64 MiB cap.
-  */
-case class InflateRaw(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"InflateRaw expects (BINARY, BIGINT), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def dataType: DataType = BinaryType
-
-  override def eval(input: InternalRow): Any = {
-    val d = left.eval(input)
-    val u = right.eval(input)
-    if (d == null || u == null) null
-    else InflateRawKernel.decode(d.asInstanceOf[Array[Byte]],
-      u.asInstanceOf[Long])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val lEv = left.genCode(ctx)
-    val rEv = right.genCode(ctx)
-    ev.copy(code = lEv.code + rEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |byte[] ${ev.value} = null;
-        |if (!${lEv.isNull} && !${rEv.isNull}) {
-        |  ${ev.value} = graft.expressions.InflateRawKernel.decode(
-        |    ${lEv.value}, ${rEv.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

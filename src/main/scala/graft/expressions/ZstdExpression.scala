@@ -1,11 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
-
 /** ZSTD frame decode (RFC 8878) of a BINARY column — the OTHER
   * compressor real corpora ship (`.jsonl.zst` dumps, `.tar.zst`
   * WebDataset shards). Unlike the gzip hop, zstd's entropy coding
@@ -81,46 +75,4 @@ object ZstdKernel {
       case _: java.io.IOException => null
     } finally z.close()
   }
-}
-
-/** `zstd_decode(content BINARY)` → BINARY — the decompressed
-  * (multi-frame-concatenated) payload, NULL on corrupt frames, failed
-  * checksums, or output beyond the 64 MiB cap. Chains with the other
-  * byte kernels exactly like gzip: `tar_members(zstd_decode(content))`
-  * reads a .tar.zst WebDataset shard.
-  */
-case class ZstdDecode(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ZstdDecode expects BINARY, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = BinaryType
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else ZstdKernel.decode(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val cEv = child.genCode(ctx)
-    ev.copy(code = cEv.code +
-      code"""
-        |boolean ${ev.isNull} = true;
-        |byte[] ${ev.value} = null;
-        |if (!${cEv.isNull}) {
-        |  ${ev.value} = graft.expressions.ZstdKernel.decode(${cEv.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-        """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,7 +1,9 @@
 package graft
 
+import graft.expressions._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, IntegralDivide, Literal, Pmod, Subtract}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression, IntegralDivide, Literal, Pmod, Subtract}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,8 +16,36 @@ import org.apache.spark.sql.types._
   * THROWS; the reference pipeline (pre-ANSI) yields NULL on bad input
   * (bronze_processor.py:54,112 relies on it). TRY-mode cast restores the
   * reference semantics regardless of the session's ansi setting.
+  *
+  * A compiled kernel is a static method on an object in
+  * [[graft.expressions]], called through Spark's generic `StaticInvoke`
+  * by one builder here: generated code calls the method directly,
+  * interpreted evaluation reaches it by reflection, a NULL argument
+  * gives NULL without a call, and each argument is implicitly cast to
+  * its declared input type as for Spark's built-ins (STRING → BINARY,
+  * INT → BIGINT, numbers → STRING, also inside arrays) or rejected at
+  * analysis.
   */
 package object functions {
+
+  /** `kernel.fn(args…)` with one declared input type per argument.
+    * `nullOnCorrupt` marks kernels that return null for input they
+    * cannot decode.
+    */
+  private def kernelCall(kernel: AnyRef, fn: String, dt: DataType,
+                         nullOnCorrupt: Boolean,
+                         args: (Expression, DataType)*): Column =
+    toColumn(StaticInvoke(kernel.getClass, dt, fn, args.map(_._1),
+      inputTypes = args.map(_._2), returnNullable = nullOnCorrupt))
+
+  /** A BINARY decoder with INT literal parameters: NULL on corrupt. */
+  private def decoder(kernel: AnyRef, fn: String, dt: DataType,
+                      content: Column, params: Int*): Column =
+    kernelCall(kernel, fn, dt, nullOnCorrupt = true,
+      (toExpression(content) -> BinaryType) +:
+        params.map(p => (Literal(p): Expression) -> IntegerType): _*)
+
+  private val Strings = ArrayType(StringType)
 
   /** `CAST(... AS dt)` in TRY evaluation mode: NULL on failure, never throws. */
   def tryCast(c: Column, dt: DataType): Column =
@@ -181,13 +211,20 @@ package object functions {
   def tokenCountNative(text: Column): Column =
     toColumn(graft.expressions.TokenCountNative(toExpression(text)))
 
+  /** Unicode NFC normalization of a string column in one compiled pass
+    * (Spark has no built-in normalizer). See [[graft.expressions.NfcKernel]].
+    */
+  def nfc(text: Column): Column =
+    kernelCall(NfcKernel, "compute", StringType, nullOnCorrupt = false,
+      toExpression(text) -> StringType)
+
   /** Compiled token-LCS length of two ARRAY<STRING> columns (the
     * ROUGE-L kernel) — one static-call codegen'd O(n·m) DP instead of
     * two nested interpreted HOF folds.
     */
   def lcsTokenLength(a: Column, b: Column): Column =
-    toColumn(graft.expressions.LcsTokenLength(
-      toExpression(a), toExpression(b)))
+    kernelCall(LcsKernel, "lcs", LongType, nullOnCorrupt = false,
+      toExpression(a) -> Strings, toExpression(b) -> Strings)
 
   /** Word n-gram shingles of a token array: array of space-joined n-grams.
     * Documents shorter than n yield an empty array.
@@ -217,20 +254,29 @@ package object functions {
   /** Exact MULTISET intersection size of two SORTED string arrays
     * (duplicates count — Σ_g min(count_a, count_b)): the clipped
     * gram-overlap numerator as one codegen'd two-pointer merge. Sort
-    * each side ONCE with sort_array; see
-    * [[graft.expressions.MultisetIntersectSortedString]].
+    * each side ONCE with sort_array. Comparison is UTF8String's binary
+    * order, the order `sort_array` sorts by; NULL elements match
+    * nothing. Unlike [[intersectCountSorted]] (distinct-set semantics
+    * for Jaccard) duplicates count. See
+    * [[graft.expressions.MultisetClipKernel.intersectSorted]].
     */
   def multisetIntersectSorted(a: Column, b: Column): Column =
-    toColumn(graft.expressions.MultisetIntersectSortedString(
-      toExpression(a), toExpression(b)))
+    kernelCall(MultisetClipKernel, "intersectSorted", LongType,
+      nullOnCorrupt = false, toExpression(a) -> Strings,
+      toExpression(b) -> Strings)
 
   /** All chrF per-order gram components of a pre-stripped (candidate,
     * reference) string pair in one codegen'd call — effective orders
-    * only. See [[graft.expressions.ChrfGramOverlaps]].
+    * only: ARRAY<STRUCT<k, n_cand_grams, n_ref_grams, overlap>>. Inputs
+    * must already be whitespace-stripped. See
+    * [[graft.expressions.ChrfKernel]].
     */
-  def chrfGramOverlaps(cand: Column, ref: Column, maxOrder: Int): Column =
-    toColumn(graft.expressions.ChrfGramOverlaps(
-      toExpression(cand), toExpression(ref), maxOrder))
+  def chrfGramOverlaps(cand: Column, ref: Column, maxOrder: Int): Column = {
+    require(maxOrder >= 1 && maxOrder <= 8, "need 1 <= maxOrder <= 8")
+    kernelCall(ChrfKernel, "overlaps", ChrfKernel.Schema, nullOnCorrupt = false,
+      toExpression(cand) -> StringType, toExpression(ref) -> StringType,
+      Literal(maxOrder) -> IntegerType)
+  }
 
   /** Frozen-merge-list BPE encode of a symbol array — the HF-inference
     * min-rank loop over a driver-bounded merge table (rank = array
@@ -246,13 +292,13 @@ package object functions {
     * [[graft.expressions.MediaHeaderKernel]].
     */
   def mediaHeader(content: Column): Column =
-    toColumn(graft.expressions.MediaHeader(toExpression(content)))
+    decoder(MediaHeaderKernel, "parse", MediaHeaderKernel.Schema, content)
 
   /** Codec-free AUDIO header decode (WAV/FLAC):
     * STRUCT<format, sample_rate, channels, bits>, NULL on corrupt.
     */
   def audioHeader(content: Column): Column =
-    toColumn(graft.expressions.AudioHeader(toExpression(content)))
+    decoder(AudioHeaderKernel, "parse", AudioHeaderKernel.Schema, content)
 
   /** Codec-free PIXEL decode (PNG via JDK Inflater + filter
     * reconstruction; BMP raw BGR; GIF via the spec's LZW):
@@ -261,7 +307,7 @@ package object functions {
     * unsupported payloads. See [[graft.expressions.PixelKernel]].
     */
   def pixelStats(content: Column): Column =
-    toColumn(graft.expressions.PixelStats(toExpression(content)))
+    decoder(PixelKernel, "parse", PixelKernel.Schema, content)
 
   /** WAV sample statistics (PCM-16 and G.711 ulaw/alaw, codec-free):
     * STRUCT<codec, sample_rate, channels, bits, n_samples, duration_ms,
@@ -270,7 +316,7 @@ package object functions {
     * [[graft.expressions.PcmKernel]].
     */
   def pcmStats(content: Column): Column =
-    toColumn(graft.expressions.PcmStats(toExpression(content)))
+    decoder(PcmKernel, "parse", PcmKernel.Schema, content)
 
   /** 64-bit energy-envelope sign hash of a WAV payload (PCM-16 and
     * G.711 ulaw/alaw) — perceptual AUDIO dedup signature for
@@ -279,7 +325,7 @@ package object functions {
     * [[graft.expressions.PcmKernel.envelopeHash]].
     */
   def audioHash(content: Column): Column =
-    toColumn(graft.expressions.AudioEnvelopeHash(toExpression(content)))
+    decoder(PcmKernel, "envelopeHash", LongType, content)
 
   /** RFC 8878 zstd frame decode (multi-frame concatenation; XXH64
     * checksums verified by the library; declared-size + streaming
@@ -287,7 +333,7 @@ package object functions {
     * [[graft.expressions.ZstdKernel]].
     */
   def zstdDecode(content: Column): Column =
-    toColumn(graft.expressions.ZstdDecode(toExpression(content)))
+    decoder(ZstdKernel, "decode", BinaryType, content)
 
   /** Codec-free VIDEO container header decode (MP4/ISO-BMFF box walk,
     * AVI RIFF walk, Matroska/WebM EBML walk): STRUCT<format, width,
@@ -296,30 +342,35 @@ package object functions {
     * [[graft.expressions.VideoHeaderKernel]].
     */
   def videoHeader(content: Column): Column =
-    toColumn(graft.expressions.VideoHeader(toExpression(content)))
+    decoder(VideoHeaderKernel, "parse", VideoHeaderKernel.Schema, content)
 
   /** Every `stride`-th uncompressed-DIB AVI frame reduced to integer
     * pixel statistics: ARRAY<STRUCT<frame_idx, lum_sum, lum_sq_sum,
     * dhash>>, NULL on corrupt / compressed payloads. See
     * [[graft.expressions.VideoFrameKernel]].
     */
-  def videoFrameStats(content: Column, stride: Int): Column =
-    toColumn(graft.expressions.VideoFrameStats(toExpression(content), stride))
+  def videoFrameStats(content: Column, stride: Int): Column = {
+    require(stride > 0, "stride must be positive")
+    decoder(VideoFrameKernel, "parse", VideoFrameKernel.Schema, content, stride)
+  }
 
   /** MP3 (MPEG Layer III) frame-walk header decode: STRUCT<sample_rate,
     * channels, n_frames, duration_ms, bitrate_kbps>, NULL on corrupt.
     * See [[graft.expressions.Mp3HeaderKernel]].
     */
   def mp3Header(content: Column): Column =
-    toColumn(graft.expressions.Mp3Header(toExpression(content)))
+    decoder(Mp3HeaderKernel, "parse", Mp3HeaderKernel.Schema, content)
 
   /** Box-filter downscale of a decodable image payload to a tw×th
     * milli-luminance grid (row-major ARRAY<BIGINT>), NULL on corrupt /
     * unsupported bytes or an upscale request. See
     * [[graft.expressions.PixelKernel.resizeBox]].
     */
-  def pixelResize(content: Column, tw: Int, th: Int): Column =
-    toColumn(graft.expressions.PixelResize(toExpression(content), tw, th))
+  def pixelResize(content: Column, tw: Int, th: Int): Column = {
+    require(tw >= 1 && th >= 1, "target dims must be positive")
+    decoder(PixelKernel, "resize", ArrayType(LongType, containsNull = false),
+      content, tw, th)
+  }
 
   /** TAR member enumeration (the WebDataset ingest kernel):
     * ARRAY<STRUCT<name, offset, size>> of regular-file members; slice
@@ -328,7 +379,7 @@ package object functions {
     * [[graft.expressions.TarKernel]].
     */
   def tarMembers(content: Column): Column =
-    toColumn(graft.expressions.TarMembers(toExpression(content)))
+    decoder(TarKernel, "parse", TarKernel.Schema, content)
 
   /** GZIP member decode (RFC 1952, multi-member concatenation, CRC-32 +
     * ISIZE verified): BINARY → BINARY, NULL on corrupt framing / failed
@@ -337,7 +388,7 @@ package object functions {
     * [[graft.expressions.GzipKernel]].
     */
   def gzipDecode(content: Column): Column =
-    toColumn(graft.expressions.GzipDecode(toExpression(content)))
+    decoder(GzipKernel, "decode", BinaryType, content)
 
   /** Image metadata STRIP (the multimodal privacy pass): JPEG
     * APP1–APP15 + COM and PNG tEXt/zTXt/iTXt/eXIf/tIME removed, pixels
@@ -345,7 +396,7 @@ package object functions {
     * malformed payloads. See [[graft.expressions.MediaStripKernel]].
     */
   def mediaStrip(content: Column): Column =
-    toColumn(graft.expressions.MediaStrip(toExpression(content)))
+    decoder(MediaStripKernel, "strip", BinaryType, content)
 
   /** ZIP member enumeration (central-directory walk): ARRAY<STRUCT<
     * name, method, offset, csize, usize>>; slice compressed bytes with
@@ -354,24 +405,26 @@ package object functions {
     * corrupt. See [[graft.expressions.ZipKernel]].
     */
   def zipMembers(content: Column): Column =
-    toColumn(graft.expressions.ZipMembers(toExpression(content)))
+    decoder(ZipKernel, "parse", ZipKernel.Schema, content)
 
   /** RFC 1951 raw-deflate decode of an already-sliced payload to
     * exactly `usize` bytes (NULL on corrupt/mismatch/64 MiB cap). See
     * [[graft.expressions.InflateRawKernel]].
     */
   def inflateRaw(data: Column, usize: Column): Column =
-    toColumn(graft.expressions.InflateRaw(toExpression(data),
-      toExpression(usize)))
+    kernelCall(InflateRawKernel, "decode", BinaryType, nullOnCorrupt = true,
+      toExpression(data) -> BinaryType, toExpression(usize) -> LongType)
 
   /** Multi-reference clipped overlap — Σ_g min(count_cand(g), max over
     * refs of count_ref(g)) — of a SORTED string array against an array
     * of SORTED string arrays: the BLEU clipping rule as one codegen'd
-    * single-pass merge. See [[graft.expressions.MultisetClipMaxRef]].
+    * single-pass merge. NULL inner reference arrays contribute no
+    * credit. See [[graft.expressions.MultisetClipKernel.clipMaxRef]].
     */
   def multisetClipMaxRef(cand: Column, refs: Column): Column =
-    toColumn(graft.expressions.MultisetClipMaxRef(
-      toExpression(cand), toExpression(refs)))
+    kernelCall(MultisetClipKernel, "clipMaxRef", LongType,
+      nullOnCorrupt = false, toExpression(cand) -> Strings,
+      toExpression(refs) -> ArrayType(Strings))
 
   /** All contiguous CHARACTER n-grams of a string, in order — the
     * char-level twin of [[shingles]] (same bind-once discipline: the

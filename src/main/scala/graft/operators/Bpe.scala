@@ -304,7 +304,59 @@ object Bpe {
     */
   def viterbiTokenCount(docs: DataFrame, idCol: String, textCol: String,
                         vocab: DataFrame, unitCol: String,
-                        scoreCol: String, unkScoreQ: Long): DataFrame = {
+                        scoreCol: String, unkScoreQ: Long): DataFrame =
+    viterbi(docs, idCol, textCol, vocab, unitCol, scoreCol, "n_unk_chars",
+      identity, _ => (lit(1L), lit(unkScoreQ)),
+      (col("__L").cast("long"), col("__L") * unkScoreQ))
+
+  /** [[viterbiTokenCount]] with SentencePiece BYTE FALLBACK (Kudo &
+    * Richardson 2018 §4.1 / the `byte_fallback` flag every production
+    * unigram model ships with): a character no unit covers does NOT
+    * become one UNK — it becomes its UTF-8 BYTE pieces (`<0xXX>`),
+    * each charged `byteScoreQ`, so the vocabulary is CLOSED and no
+    * token is ever UNK. The DP's fallback transition at end position e
+    * therefore costs (nb·byteScoreQ, +nb tokens, +nb byte-tokens)
+    * where nb = UTF-8 byte length of the character ending at e —
+    * per-position byte lengths are materialized once per distinct word
+    * (octet_length of each code point) and read by the fold.
+    *
+    * Same lexicographic optimum (score, fewest tokens, fewest
+    * byte-tokens), same DISTINCT-WORD scale shape as
+    * [[viterbiTokenCount]].
+    *
+    * @return (idCol, n_words, n_tokens, n_byte_tokens, viterbi_score_q)
+    */
+  def viterbiTokenCountByteFallback(docs: DataFrame, idCol: String,
+                                    textCol: String, vocab: DataFrame,
+                                    unitCol: String, scoreCol: String,
+                                    byteScoreQ: Long): DataFrame = {
+    val bytes = octet_length(col("w")).cast("long")
+    viterbi(docs, idCol, textCol, vocab, unitCol, scoreCol, "n_byte_tokens",
+      // UTF-8 byte length of the character ending at each position —
+      // bound once, read per DP step
+      _.withColumn("__bl", transform(sequence(lit(1), col("__L")),
+        e => octet_length(col("w").substr(e, lit(1))).cast("long"))),
+      e => {
+        val nb = element_at(col("__bl"), e)
+        (nb, nb * byteScoreQ)
+      },
+      (bytes, bytes * byteScoreQ))
+  }
+
+  /** The shared Viterbi DP of [[viterbiTokenCount]] and
+    * [[viterbiTokenCountByteFallback]]; they differ only in how a
+    * character no unit covers is charged. `fallback(e)` gives the
+    * (tokens, score) of that transition at end position e, reading any
+    * per-word column `wordCols` adds; `allFallback` gives the same
+    * totals for a word no unit matches anywhere; `fallbackCol` names
+    * the output count of fallback tokens.
+    */
+  private def viterbi(docs: DataFrame, idCol: String, textCol: String,
+                      vocab: DataFrame, unitCol: String, scoreCol: String,
+                      fallbackCol: String,
+                      wordCols: DataFrame => DataFrame,
+                      fallback: Column => (Column, Column),
+                      allFallback: (Column, Column)): DataFrame = {
     val units = vocab.select(col(unitCol).as("__u"),
       col(scoreCol).cast("long").as("__sc"))
     val shape = units.agg(count(lit(1)).as("n"),
@@ -318,8 +370,8 @@ object Bpe {
 
     val docWords = docs.select(col(idCol),
       explode(TextAnalysis.tokens(col(textCol))).as("w"))
-    val words = docWords.select("w").distinct()
-      .withColumn("__L", length(col("w")))
+    val words = wordCols(docWords.select("w").distinct()
+      .withColumn("__L", length(col("w"))))
     val cand = words.select(col("w"), col("__L"), explode(flatten(
         transform(sequence(lit(1), col("__L")), p =>
           transform(sequence(lit(1), least(lit(maxLen), col("__L") - p + 1)),
@@ -344,140 +396,40 @@ object Bpe {
             lit(0L).as("nnu"))),
           (acc, e) => {
             val prev = element_at(acc, e) // best[e-1]
-            val unkC = struct(
-              (prev.getField("s") + unkScoreQ).as("s"),
-              (prev.getField("nnt") - 1L).as("nnt"),
-              (prev.getField("nnu") - 1L).as("nnu"))
+            val (nf, sf) = fallback(e)
+            val fallC = struct(
+              (prev.getField("s") + sf).as("s"),
+              (prev.getField("nnt") - nf).as("nnt"),
+              (prev.getField("nnu") - nf).as("nnu"))
             val unitCs = transform(element_at(col("__ends"), e), m => {
               val pe = element_at(acc, e - m.getField("__k") + 1)
               struct((pe.getField("s") + m.getField("__sc")).as("s"),
                 (pe.getField("nnt") - 1L).as("nnt"),
                 pe.getField("nnu").as("nnu"))
             })
-            concat(acc, array(array_max(concat(array(unkC), unitCs))))
+            concat(acc, array(array_max(concat(array(fallC), unitCs))))
           }),
         -1))
       .select(col("w"), (-col("__best.nnt")).as("__nt"),
         (-col("__best.nnu")).as("__nu"), col("__best.s").as("__s"))
     // a word NO unit matches anywhere is absent from `matched`: its
-    // only path is all-UNK — (L tokens, L unks, L·unkScoreQ)
+    // only path is all-fallback
+    val (allN, allS) = allFallback
     val segAll = words.join(seg, Seq("w"), "left")
-      .select(col("w"),
-        coalesce(col("__nt"), col("__L").cast("long")).as("__nt"),
-        coalesce(col("__nu"), col("__L").cast("long")).as("__nu"),
-        coalesce(col("__s"), col("__L") * unkScoreQ).as("__s"))
+      .select(col("w"), coalesce(col("__nt"), allN).as("__nt"),
+        coalesce(col("__nu"), allN).as("__nu"),
+        coalesce(col("__s"), allS).as("__s"))
     val stats = docWords.join(segAll, "w")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_words"), sum(col("__nt")).as("n_tokens"),
-        sum(col("__nu")).as("n_unk_chars"),
+        sum(col("__nu")).as(fallbackCol),
         sum(col("__s")).as("viterbi_score_q"))
     docs.select(col(idCol))
       .join(stats, Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("n_words"), lit(0L)).as("n_words"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("n_unk_chars"), lit(0L)).as("n_unk_chars"),
-        coalesce(col("viterbi_score_q"), lit(0L)).as("viterbi_score_q"))
-  }
-
-  /** [[viterbiTokenCount]] with SentencePiece BYTE FALLBACK (Kudo &
-    * Richardson 2018 §4.1 / the `byte_fallback` flag every production
-    * unigram model ships with): a character no unit covers does NOT
-    * become one UNK — it becomes its UTF-8 BYTE pieces (`<0xXX>`),
-    * each charged `byteScoreQ`, so the vocabulary is CLOSED and no
-    * token is ever UNK. The DP's fallback transition at end position e
-    * therefore costs (nb·byteScoreQ, +nb tokens, +nb byte-tokens)
-    * where nb = UTF-8 byte length of the character ending at e —
-    * per-position byte lengths are materialized once per distinct word
-    * (octet_length of each code point) and read by the fold.
-    *
-    * Same lexicographic optimum (score, fewest tokens, fewest
-    * byte-tokens), same DISTINCT-WORD scale shape as
-    * [[viterbiTokenCount]].
-    *
-    * @return (idCol, n_words, n_tokens, n_byte_tokens, viterbi_score_q)
-    */
-  def viterbiTokenCountByteFallback(docs: DataFrame, idCol: String,
-                                    textCol: String, vocab: DataFrame,
-                                    unitCol: String, scoreCol: String,
-                                    byteScoreQ: Long): DataFrame = {
-    val units = vocab.select(col(unitCol).as("__u"),
-      col(scoreCol).cast("long").as("__sc"))
-    val shape = units.agg(count(lit(1)).as("n"),
-      min(length(col("__u"))).as("mn"), max(length(col("__u"))).as("mx"),
-      count(when(col("__sc").isNull, 1)).as("nullsc")).head()
-    require(shape.getLong(0) > 0L, "empty vocab")
-    require(!shape.isNullAt(1) && shape.getInt(1) >= 1,
-      "vocab has NULL or empty units")
-    require(shape.getLong(3) == 0L, "vocab has NULL scores")
-    val maxLen = shape.getInt(2)
-
-    val docWords = docs.select(col(idCol),
-      explode(TextAnalysis.tokens(col(textCol))).as("w"))
-    val words = docWords.select("w").distinct()
-      .withColumn("__L", length(col("w")))
-      // UTF-8 byte length of the character ending at each position —
-      // bound once, read per DP step
-      .withColumn("__bl", transform(sequence(lit(1), col("__L")),
-        e => octet_length(col("w").substr(e, lit(1))).cast("long")))
-    val cand = words.select(col("w"), col("__L"), explode(flatten(
-        transform(sequence(lit(1), col("__L")), p =>
-          transform(sequence(lit(1), least(lit(maxLen), col("__L") - p + 1)),
-            k => struct(p.as("pos"), k.as("k")))))).as("__pk"))
-      .select(col("w"), col("__pk.pos").as("__pos"), col("__pk.k").as("__k"))
-      .withColumn("__sub", col("w").substr(col("__pos"), col("__k")))
-    val matched = cand.join(broadcast(units), col("__sub") === col("__u"))
-      .select(col("w"), col("__pos"), col("__k"), col("__sc"))
-    val seg = matched.groupBy("w")
-      .agg(collect_list(struct(col("__pos"), col("__k"), col("__sc")))
-        .as("__ms"))
-      .join(words, Seq("w"))
-      .withColumn("__ends", transform(sequence(lit(1), col("__L")), e =>
-        filter(col("__ms"),
-          m => m.getField("__pos") + m.getField("__k") - 1 === e)))
-      .withColumn("__best", element_at(
-        aggregate(sequence(lit(1), col("__L")),
-          array(struct(lit(0L).as("s"), lit(0L).as("nnt"),
-            lit(0L).as("nnu"))),
-          (acc, e) => {
-            val prev = element_at(acc, e) // best[e-1]
-            val nb = element_at(col("__bl"), e)
-            val byteC = struct(
-              (prev.getField("s") + nb * byteScoreQ).as("s"),
-              (prev.getField("nnt") - nb).as("nnt"),
-              (prev.getField("nnu") - nb).as("nnu"))
-            val unitCs = transform(element_at(col("__ends"), e), m => {
-              val pe = element_at(acc, e - m.getField("__k") + 1)
-              struct((pe.getField("s") + m.getField("__sc")).as("s"),
-                (pe.getField("nnt") - 1L).as("nnt"),
-                pe.getField("nnu").as("nnu"))
-            })
-            concat(acc, array(array_max(concat(array(byteC), unitCs))))
-          }),
-        -1))
-      .select(col("w"), (-col("__best.nnt")).as("__nt"),
-        (-col("__best.nnu")).as("__nu"), col("__best.s").as("__s"))
-    // a word NO unit matches anywhere: the all-bytes path —
-    // octet_length(w) byte tokens at byteScoreQ each
-    val segAll = words.join(seg, Seq("w"), "left")
-      .select(col("w"),
-        coalesce(col("__nt"), octet_length(col("w")).cast("long"))
-          .as("__nt"),
-        coalesce(col("__nu"), octet_length(col("w")).cast("long"))
-          .as("__nu"),
-        coalesce(col("__s"),
-          octet_length(col("w")).cast("long") * byteScoreQ).as("__s"))
-    val stats = docWords.join(segAll, "w")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_words"), sum(col("__nt")).as("n_tokens"),
-        sum(col("__nu")).as("n_byte_tokens"),
-        sum(col("__s")).as("viterbi_score_q"))
-    docs.select(col(idCol))
-      .join(stats, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_words"), lit(0L)).as("n_words"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("n_byte_tokens"), lit(0L)).as("n_byte_tokens"),
+        coalesce(col(fallbackCol), lit(0L)).as(fallbackCol),
         coalesce(col("viterbi_score_q"), lit(0L)).as("viterbi_score_q"))
   }
 

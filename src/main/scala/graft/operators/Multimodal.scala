@@ -57,7 +57,7 @@ object Multimodal {
   /** REAL header decode — the filter-gate read a multimodal pipeline
     * runs before any pixel work: format / width / height / bit depth
     * parsed straight from PNG IHDR, GIF LSD, and JPEG SOFn header bytes
-    * by the codegen'd [[graft.expressions.MediaHeader]] kernel (pure
+    * by the codegen'd [[graft.functions.mediaHeader]] kernel (pure
     * byte arithmetic, no codec jars). Corrupt, truncated, or
     * unknown-magic payloads yield a NULL struct — loud, never a wrong
     * dimension. Scale shape: one map-only projection; payload bytes
@@ -106,7 +106,7 @@ object Multimodal {
 
   /** REAL audio header decode — WAV (RIFF chunk walk to "fmt ") and
     * FLAC (STREAMINFO bit unpacking) via the codegen'd
-    * [[graft.expressions.AudioHeader]] kernel: (format, sample_rate,
+    * [[graft.functions.audioHeader]] kernel: (format, sample_rate,
     * channels, bits), NULL on corrupt. The sample-rate/channel gates an
     * audio training pipeline runs before any PCM decode.
     */
@@ -114,7 +114,7 @@ object Multimodal {
     graft.functions.audioHeader(content)
 
   /** The audio QUALITY gate's aggregate columns over a decoded
-    * [[graft.expressions.PcmStats]] struct — SHARED by the q346 batch
+    * [[graft.functions.pcmStats]] struct — SHARED by the q346 batch
     * verdict and the streaming twin
     * ([[graft.streaming.CorpusStreams.windowedAudioGate]]), the
     * [[gateCounts]] discipline for the audio half: batch and stream
@@ -146,7 +146,7 @@ object Multimodal {
   }
 
   /** REAL video container header decode — MP4/ISO-BMFF box walk and
-    * AVI RIFF walk via the codegen'd [[graft.expressions.VideoHeader]]
+    * AVI RIFF walk via the codegen'd [[graft.functions.videoHeader]]
     * kernel: (format, width, height, duration_ms, n_frames, codec),
     * NULL on corrupt. The resolution/duration gate a video training
     * pipeline runs before any frame is decoded.

@@ -64,15 +64,6 @@ object TextAnalysis {
       lit(seed),
       (acc, x) => (acc * mult + x) % mod)
 
-  /** Unicode NFC normalization (compiled kernel,
-    * expressions/NfcNormalizeNative): canonical composition so "é" as
-    * U+00E9 and as "e"+U+0301 hash identically everywhere downstream.
-    */
-  def nfc(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
-    toColumn(graft.expressions.NfcNormalizeNative(toExpression(c)))
-  }
-
   /** Canonical text for dedup/fingerprinting — the normalization pass a
     * crawl corpus needs BEFORE any hash sees it: NFC composition, then
     * whitespace-run collapse to one space (explicit class
@@ -91,7 +82,7 @@ object TextAnalysis {
     */
   def canonicalize(c: Column): Column =
     trim(regexp_replace(
-      regexp_replace(nfc(c), "[ \\t\\n\\r\\f\\x0B]+", " "),
+      regexp_replace(graft.functions.nfc(c), "[ \\t\\n\\r\\f\\x0B]+", " "),
       "[\\p{Cc}\\p{Cf}]", ""))
 
   /** Whitespace tokens (shared with dedup so shingles and counts agree). */

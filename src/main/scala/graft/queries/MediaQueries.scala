@@ -16,7 +16,7 @@ object MediaQueries {
     // PNG/GIF/JPEG header payloads are CONSTRUCTED per doc from doc_id
     // arithmetic — spec-true magic/IHDR/LSD/SOF0 byte layouts built with
     // hex-string arithmetic (unhex/lpad/hex; LE via explicit byte-pair
-    // swap) — then parsed back by the native MediaHeader kernel, which
+    // swap) — then parsed back by the native mediaHeader kernel, which
     // reads the bytes big/little-endian as each spec demands. The two
     // paths share no code (string-hex construction vs byte arithmetic),
     // so an endianness or offset bug in either side breaks the gate;
@@ -419,7 +419,7 @@ object MediaQueries {
     // scanlines forward-filtered with all five spec filter types
     // y % 5) and 24bpp bottom-up BMPs are constructed from doc_id
     // arithmetic (PixelFixtures — forward filters + a hand-rolled
-    // Adler-32), then decoded back by the native PixelStats kernel
+    // Adler-32), then decoded back by the native pixelStats kernel
     // (JDK Inflater + filter RECONSTRUCTION — inverse direction, no
     // shared code). The oracle re-derives every output column —
     // payload sizes, integer luminance sums, the 9×8-grid dHash — from
@@ -591,7 +591,7 @@ object MediaQueries {
     // PLANTED full-scale clipping on the %5==0 slice), and
     // silence-padded tones — rendered to 16-bit two's-complement LE
     // bytes by hex Column arithmetic, then decoded back by the native
-    // PcmStats kernel. The oracle re-derives energy, clipping counts,
+    // pcmStats kernel. The oracle re-derives energy, clipping counts,
     // and the leading/trailing silence runs from the sample formulas
     // alone. %10==9 plants a mid-data truncation (declared data size
     // not fully present) → NULL.
@@ -829,7 +829,7 @@ object MediaQueries {
     // 256-entry palette and LZW-coded index streams are constructed by
     // the fixture ENCODER (literal codes + periodic CLEARs + LSB-first
     // bit packing — no code shared with the kernel's table decode),
-    // decoded back by PixelStats, and every statistic re-derived by
+    // decoded back by pixelStats, and every statistic re-derived by
     // the oracle from the index arithmetic alone (palette entry i =
     // (i, 3i%256, 5i%256) — the shared RGB-luminance formula).
     // %10==7 truncates inside the color table → NULL.
@@ -1395,7 +1395,7 @@ object MediaQueries {
     // TAR member enumeration (the WebDataset shard layout — how
     // large-scale multimodal training data actually ships): spec-true
     // POSIX-ustar archives of paired {sample}.bmp / {sample}.txt
-    // members, enumerated by the native TarMembers kernel (512-block
+    // members, enumerated by the native tarMembers kernel (512-block
     // walk, octal sizes, zero-block EOF). The oracle re-derives every
     // member's OFFSET as the cumulative 512-padded block sum and every
     // SIZE from the q342 BMP size arithmetic — the whole archive

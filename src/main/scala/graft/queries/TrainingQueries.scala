@@ -911,7 +911,7 @@ object TrainingQueries {
       oViterbiSql(viterbiScoredVocab, viterbiUnkScoreQ)),
 
     // ROUGE-L over the q304 pair set: LCS-based order-sensitive
-    // generation eval through the native codegen'd LcsTokenLength
+    // generation eval through the native codegen'd lcsTokenLength
     // kernel — the whole query is ONE pure projection over the pair
     // join (no explode, no aggregate); both sides truncated to 128
     // tokens (the stated quadratic-kernel bound).

@@ -1,7 +1,9 @@
 package graft
 
 import graft.plans.GraftExtensions
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 
 /** The SQL function surface: every registered kernel must be callable
   * from spark.sql and agree with the Scala-API operators it mirrors.
@@ -213,5 +215,175 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(chrf.map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
       x.getLong(3))) === Seq((1L, 5L, 4L, 4L), (2L, 4L, 3L, 2L),
       (3L, 3L, 2L, 1L)))
+  }
+
+  // ---------------------------------------------------------------- the
+  // whole registry: one 3-row fixture (id 0 valid, 1 corrupt, 2 NULL) and
+  // every graft_* function called from SQL and through its Scala builder
+
+  private lazy val fx: DataFrame = {
+    import graft.queries.{AudioFixtures, PixelFixtures, TarFixtures, VideoFixtures}
+    def cut(b: Array[Byte]): Array[Byte] = b.take(b.length / 2)
+    val png = PixelFixtures.pngGray(4L)
+    val wav = AudioFixtures.dedupPayload(1L)
+    val avi = VideoFixtures.avi(1L)
+    // two MPEG-1 Layer III frames: 128 kbps, 44.1 kHz, stereo, 417 bytes
+    val mp3 = Array.fill(2)(Array(0xFF, 0xFB, 0x90, 0x00).map(_.toByte) ++
+      new Array[Byte](413)).flatten
+    val tar = TarFixtures.tar(1L)
+    val text = "hello hello hello raw deflate".getBytes("UTF-8")
+    val dfl = {
+      val d = new java.util.zip.Deflater(6, true)
+      d.setInput(text); d.finish()
+      val buf = new Array[Byte](256)
+      val n = d.deflate(buf); d.end()
+      buf.take(n)
+    }
+    val jpg = PixelFixtures.jpegWithExif(3L)
+    val valid = Row(0L, "the quick brown fox jumps over the quick dog",
+      "the quick brown cat", "https://Blog.Example.CO.UK:443/p?id=1&utm_source=f#x",
+      Seq(1.0f, 2.0f, 3.0f), Seq(4.0f, 5.0f, 6.0f),
+      Seq(1L, 2L, 3L, 3L), Seq(2L, 3L, 5L),
+      Seq("the", "cat", "sat", "the"), Seq("the", "cat", "the"),
+      Seq(Seq("cat", "the"), Seq("sat")), 7L, 70L,
+      png, wav, avi, mp3, tar, TarFixtures.gzip(tar), TarFixtures.zstd(tar),
+      TarFixtures.zip(1L), jpg, dfl, text.length.toLong)
+    val corrupt = Row(1L, "e\u0301\u00A0 \uD83D\uDE00\u0000\t x", "", "::not a url::",
+      Seq(1.0f), Seq(1.0f, 2.0f), Seq(5L, 1L, 5L), Seq(1L, 5L),
+      Seq("a", null), Seq(null, "a"), Seq(null, Seq("a")), 3L, 30L,
+      cut(png), cut(wav), cut(avi), cut(mp3), cut(tar),
+      cut(TarFixtures.gzip(tar)), cut(TarFixtures.zstd(tar)),
+      cut(TarFixtures.zip(1L)), cut(jpg), Array[Byte](1, 2, 3), 5L)
+    val nul = Row.fromSeq(2L +: Seq.fill(valid.length - 1)(null))
+    def f(n: String, t: DataType) = StructField(n, t)
+    val strs = ArrayType(StringType)
+    val schema = StructType(Seq(f("id", LongType), f("s", StringType),
+      f("r", StringType), f("url", StringType),
+      f("fa", ArrayType(FloatType)), f("fb", ArrayType(FloatType)),
+      f("la", ArrayType(LongType)), f("lb", ArrayType(LongType)),
+      f("ta", strs), f("tb", strs), f("refs", ArrayType(strs)),
+      f("h", LongType), f("v", LongType)) ++
+      Seq("png", "wav", "avi", "mp3", "tar", "gz", "zst", "zip", "jpg", "dfl")
+        .map(f(_, BinaryType)) :+ f("usize", LongType))
+    // cached, so the optimizer cannot fold the projections over a local
+    // relation and the generated code is what runs
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(valid, corrupt, nul), schema).cache()
+    df.createOrReplaceTempView("fx")
+    df
+  }
+
+  /** name → (SQL arguments over `fx`, the same call through the Scala
+    * builder); covers all 40 registered functions.
+    */
+  private def registry: Seq[(String, String, Column)] = {
+    import graft.expressions._
+    import graft.functions._
+    import graft.operators._
+    import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
+    def c(n: String) = col(n)
+    def e(n: String) = toExpression(col(n))
+    Seq(
+      ("graft_dot_f", "fa, fb", dotProductF(c("fa"), c("fb"))),
+      ("graft_simhash", "s", TextAnalysis.simHash(c("s"))),
+      ("graft_polyhash", "s", TextAnalysis.polyHash(c("s"))),
+      ("graft_ngram_hash_set", "s, 2", toColumn(NgramHashSet(e("s"), 2))),
+      ("graft_ngram_hash_seq", "s, 2", ngramHashSeq(c("s"), 2)),
+      ("graft_token_count", "s", tokenCountNative(c("s"))),
+      ("graft_intersect_count_sorted", "la, lb", intersectCountSorted(c("la"), c("lb"))),
+      ("graft_max_equal_run", "la", toColumn(MaxEqualRunLongs(e("la")))),
+      ("graft_bottomk", "h, 2", Sketch.bottomKHashes(c("h"), 2)),
+      ("graft_bottomk_pairs", "h, v, 2",
+        toColumn(BottomKLongPairs(e("h"), e("v"), 2).toAggregateExpression())),
+      ("graft_pii_redact", "s", TextAnalysis.piiRedact(c("s"))),
+      ("graft_quality_score", "s", TextAnalysis.qualityScore(c("s"))),
+      ("graft_hash_bucket", "id, 10", Sampling.hashBucket(c("id"), 10)),
+      ("graft_url_normalize", "url", UrlOps.normalizeUrl(c("url"))),
+      ("graft_url_host", "url", UrlOps.host(c("url"))),
+      ("graft_url_domain", "url", UrlOps.registrableDomain(c("url"))),
+      ("graft_mg_topk", "s, 2", HeavyHitters.mgSummary(c("s"), 2)),
+      ("graft_rendezvous_shard", "s, 4", Layout.rendezvousShard(c("s"), 4)),
+      ("graft_winnow_fps", "s, 2, 3", Winnow.fingerprintArray(c("s"), 2, 3)),
+      ("graft_nfc", "s", graft.functions.nfc(c("s"))),
+      ("graft_canonical_text", "s", TextAnalysis.canonicalize(c("s"))),
+      ("graft_multiset_intersect_sorted", "ta, tb", multisetIntersectSorted(c("ta"), c("tb"))),
+      ("graft_multiset_clip_max_ref", "ta, refs", multisetClipMaxRef(c("ta"), c("refs"))),
+      ("graft_lcs_token_length", "ta, tb", lcsTokenLength(c("ta"), c("tb"))),
+      ("graft_chrf_gram_overlaps", "s, r, 3", chrfGramOverlaps(c("s"), c("r"), 3)),
+      ("graft_media_header", "png", mediaHeader(c("png"))),
+      ("graft_audio_header", "wav", audioHeader(c("wav"))),
+      ("graft_pixel_stats", "png", pixelStats(c("png"))),
+      ("graft_pcm_stats", "wav", pcmStats(c("wav"))),
+      ("graft_audio_hash", "wav", audioHash(c("wav"))),
+      ("graft_video_header", "avi", videoHeader(c("avi"))),
+      ("graft_video_frame_stats", "avi, 1", videoFrameStats(c("avi"), 1)),
+      ("graft_mp3_header", "mp3", mp3Header(c("mp3"))),
+      ("graft_tar_members", "tar", tarMembers(c("tar"))),
+      ("graft_gzip_decode", "gz", gzipDecode(c("gz"))),
+      ("graft_zstd_decode", "zst", zstdDecode(c("zst"))),
+      ("graft_media_strip", "jpg", mediaStrip(c("jpg"))),
+      ("graft_zip_members", "zip", zipMembers(c("zip"))),
+      ("graft_inflate_raw", "dfl, usize", inflateRaw(c("dfl"), c("usize"))),
+      ("graft_pixel_resize", "png, 2, 2", pixelResize(c("png"), 2, 2)))
+  }
+
+  private val aggregates = Set("graft_bottomk", "graft_bottomk_pairs", "graft_mg_topk")
+
+  private def scalars = registry.filterNot(r => aggregates(r._1))
+
+  test("every registered function resolves from SQL and equals its Scala builder") {
+    fx
+    assert(registry.map(_._1).sorted ===
+      GraftExtensions.functions.map(_._1.funcName).sorted)
+    assert(registry.size === 40)
+    val viaSql = spark.sql(scalars.map { case (n, a, _) => s"$n($a) AS $n" }
+      .mkString("SELECT id, ", ", ", " FROM fx ORDER BY id")).collect()
+    val viaApi = fx.select(col("id") +: scalars.map { case (n, _, b) => b.as(n) }: _*)
+      .orderBy("id").collect()
+    assert(viaSql.length === 3)
+    scalars.zipWithIndex.foreach { case ((n, _, _), i) =>
+      val (s, a) = (viaSql.map(r => Row(r.get(i + 1))), viaApi.map(r => Row(r.get(i + 1))))
+      assert(s.toSeq === a.toSeq, n)
+      assert(!viaSql(0).isNullAt(i + 1), s"$n is NULL on the valid row")
+    }
+    registry.filter(r => aggregates(r._1)).foreach { case (n, a, b) =>
+      val s = spark.sql(s"SELECT $n($a) FROM fx").collect().toSeq
+      assert(s === fx.agg(b).collect().toSeq, n)
+      assert(!s.head.isNullAt(0), n)
+    }
+  }
+
+  test("scalar functions give the same rows interpreted as generated") {
+    fx
+    def run(): Array[Row] =
+      fx.select(col("id") +: scalars.map { case (n, _, b) => b.as(n) }: _*)
+        .orderBy("id").collect()
+    val generated = run()
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    val interpreted =
+      try {
+        spark.conf.set(keys(0), "NO_CODEGEN")
+        spark.conf.set(keys(1), "false")
+        run()
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    scalars.zipWithIndex.foreach { case ((n, _, _), i) =>
+      assert(interpreted.map(r => Row(r.get(i + 1))).toSeq ===
+        generated.map(r => Row(r.get(i + 1))).toSeq, n)
+    }
+  }
+
+  test("a non-coercible argument fails analysis through SQL and the Column API") {
+    fx
+    for (q <- Seq("SELECT graft_media_header(CAST(id AS INT)) FROM fx",
+      "SELECT graft_lcs_token_length(png, png) FROM fx"))
+      intercept[AnalysisException](spark.sql(q).collect())
+    intercept[AnalysisException](
+      fx.select(graft.functions.mediaHeader(col("id").cast("int"))).collect())
+    intercept[AnalysisException](
+      fx.select(graft.functions.lcsTokenLength(col("png"), col("png"))).collect())
   }
 }

@@ -17,13 +17,13 @@ class TextNormSpec extends SparkSpec {
 
   test("nfc composes combining sequences; ascii passes through") {
     val got = Seq("Cafe" + Acute, "plain ascii").toDF("t")
-      .select(TextAnalysis.nfc($"t")).as[String].collect()
+      .select(graft.functions.nfc($"t")).as[String].collect()
     assert(got.toSeq == Seq("Café", "plain ascii"))
   }
 
   test("nfc is null-preserving") {
     val got = Seq(Option.empty[String]).toDF("t")
-      .select(TextAnalysis.nfc($"t")).collect()
+      .select(graft.functions.nfc($"t")).collect()
     assert(got.head.isNullAt(0))
   }
 
